@@ -96,12 +96,11 @@ object Tables {
     * failure mode a forced hint trades for the old sort-merge's graceful
     * degradation. Callers must pass a frame that is CHEAP to count —
     * checkpointed, or a small-aggregate output — because the count runs
-    * eagerly here. Limit override: spark.graft.broadcastRowLimit
-    * (default 5e6 rows ≈ tens of MB for narrow rows). */
-  def broadcastIfSmall(df: DataFrame): DataFrame = {
-    val limit = df.sparkSession.conf
-      .getOption("spark.graft.broadcastRowLimit").map(_.toLong)
-      .getOrElse(5000000L)
-    if (df.count() <= limit) broadcast(df) else df
-  }
+    * eagerly here. The limit is [[BroadcastRowLimit]]. */
+  def broadcastIfSmall(df: DataFrame): DataFrame =
+    if (df.count() <= BroadcastRowLimit) broadcast(df) else df
+
+  /** Row count up to which [[broadcastIfSmall]] broadcasts: 5e6 rows is
+    * tens of MB for the narrow dim-scale rows it gates. */
+  val BroadcastRowLimit = 5000000L
 }

@@ -169,15 +169,24 @@ class CollectiveALS(entityNames: String*) extends Serializable {
         math.max(1L, math.min(sessionShuffle.toLong, totalRows / 100000L + 1)).toInt
       }
       spark.conf.set("spark.sql.shuffle.partitions", fitShuffle)
-      try fitWith(spark, datasets, auditIds = numPartitions.isDefined)
-      finally spark.conf.set("spark.sql.shuffle.partitions", sessionShuffle)
+      // Every frame the fit persists (rating layouts, in-loop factors) is
+      // released here whether the fit returns or throws: a failed id
+      // audit or iteration must not leave them cached. The returned
+      // model's factors are checkpoints, not persisted frames.
+      val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      try fitWith(spark, datasets, held, auditIds = numPartitions.isDefined)
+      finally {
+        held.foreach(_.unpersist(false))
+        spark.conf.set("spark.sql.shuffle.partitions", sessionShuffle)
+      }
     }
   }
 
   private def fitWith(
       spark: SparkSession,
       datasets: Seq[((String, String), DataFrame)],
-      auditIds: Boolean = false): CollectiveALSModel = {
+      held: scala.collection.mutable.Buffer[DataFrame],
+      auditIds: Boolean): CollectiveALSModel = {
     val ratingExpr = if (ratingCol.nonEmpty) col(ratingCol).cast("float") else lit(1.0f)
 
     // Pre-project and cache each relation in both hash layouts.
@@ -190,11 +199,14 @@ class CollectiveALS(entityNames: String*) extends Serializable {
         col(l).cast("long").as("leftId"),
         col(r).cast("long").as("rightId"),
         ratingExpr.as("rating"))
-      def layout(src: DataFrame, key: String, entity: Int) =
-        numPartitionsPerEntity.get(entity).orElse(numPartitions)
+      def layout(src: DataFrame, key: String, entity: Int) = {
+        val df = numPartitionsPerEntity.get(entity).orElse(numPartitions)
           .map(n => src.repartition(n, col(key)))
           .getOrElse(src.repartition(col(key)))
           .persist(intermediateStorageLevel)
+        held += df
+        df
+      }
       // The second layout re-shuffles the FIRST layout's cache, so the
       // upstream rating pipeline (often a join+agg) executes once, not
       // once per layout.
@@ -299,6 +311,7 @@ class CollectiveALS(entityNames: String*) extends Serializable {
             solved.localCheckpoint(true, intermediateStorageLevel)
           else {
             val p = solved.persist(intermediateStorageLevel)
+            held += p
             p.count() // materialize before the predecessor unpersists
             p
           }
@@ -307,7 +320,6 @@ class CollectiveALS(entityNames: String*) extends Serializable {
       }
     }
 
-    rels.foreach { r => r.byLeft.unpersist(false); r.byRight.unpersist(false) }
     new CollectiveALSModel(rank, factors.toIndexedSeq, cols.toIndexedSeq, predictionCol)
   }
 

@@ -46,9 +46,9 @@ object PageRank {
     // groupBy(t) aggregation) remains per step. Both frames are
     // checkpointed, so the gating counts are metadata-cheap, and at a
     // scale past the broadcast limit the joins degrade to the old
-    // shuffled form. Rank values verified bit-identical to the old plan
-    // at sf0.1 on both pagerank queries (the per-key double sums land on
-    // the same values).
+    // shuffled form. Rank values are identical to the old sort-merge
+    // loop's at 6 dp on both pagerank queries' edge sets; raw doubles
+    // drift by a few ulps (PageRankEquivalenceSpec).
     val ed = e.join(graft.Tables.broadcastIfSmall(deg), "s")
     var p = deg.select(col("s").as("v"), lit(1.0 / n).as("p"))
     for (_ <- 1 to iterations) {

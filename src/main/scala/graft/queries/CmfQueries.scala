@@ -533,9 +533,10 @@ object CmfQueries {
         .localCheckpoint(true)
     })
 
-  def cfItemPredict(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val rc = coratedCapped(s, dir)
+  /** [[cfItemPredict]]'s item-item cosine over the capped co-rating
+    * table `rc` (u, i, q): ordered (i, j, sim_u) rows, i ≠ j, sim_u the
+    * cosine in integer micro-units, sim_u > 0. */
+  private[graft] def itemSims(s: SparkSession, rc: DataFrame): DataFrame = {
     val n2 = rc.groupBy("i").agg(sum(col("q") * col("q")).as("s2"))
     // Explicit u-hash repartitions on BOTH self-join inputs: the rating
     // table is tiny in bytes, so AQE coalesces an ENSURE_REQUIREMENTS
@@ -559,7 +560,8 @@ object CmfQueries {
     // the aggregation hash map all HALVE vs the old i ≠ j enumeration
     // (§2.3 shuffle fewer bytes; set-equality of the mirrored table vs
     // the old construction verified row-for-row at sf0.1, 25 406 930
-    // rows, zero asymmetry). No checkpoint here: the two union branches
+    // rows, zero asymmetry; CfMirrorSpec keeps that check at sf0.001).
+    // No checkpoint here: the two union branches
     // read the SAME enumeration exchange (Spark reuses identical
     // exchanges within one execution), so only the cheap final-agg/
     // join/filter segment runs per branch — a checkpoint of the ~13M-row
@@ -582,8 +584,14 @@ object CmfQueries {
           .cast("long"))
       .filter(col("sim_u") > 0)
       .select("i", "j", "sim_u")
-    val sims = simsHalf.unionByName(
+    simsHalf.unionByName(
       simsHalf.select(col("j").as("i"), col("i").as("j"), col("sim_u")))
+  }
+
+  def cfItemPredict(s: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val rc = coratedCapped(s, dir)
+    val sims = itemSims(s, rc)
     val top = sims
       .withColumn("rn", row_number().over(
         Window.partitionBy("i").orderBy(col("sim_u").desc, col("j"))))

@@ -33,8 +33,8 @@ class AlsCrossCheckSpec extends SparkSpec {
       i <- 0 until nItems
       if CollectiveALS.splitmix64(u * 10007L + i) % 2 == 0
     } yield {
-      val fu = ConvergenceProbe.signedFactor(1L, u, trueRank)
-      val fi = ConvergenceProbe.signedFactor(2L, i, trueRank)
+      val fu = PlantedFactors.signedFactor(1L, u, trueRank)
+      val fi = PlantedFactors.signedFactor(2L, i, trueRank)
       (u.toLong, i.toLong, fu.zip(fi).map { case (a, b) => a * b }.sum * 5.0f)
     }
     rows.toDF("user", "item", "rating")
@@ -122,8 +122,8 @@ class AlsCrossCheckSpec extends SparkSpec {
       u <- 0 until nUsers
       i <- 0 until nItems
       if {
-        val fu = ConvergenceProbe.signedFactor(1L, u, trueRank)
-        val fi = ConvergenceProbe.signedFactor(2L, i, trueRank)
+        val fu = PlantedFactors.signedFactor(1L, u, trueRank)
+        val fi = PlantedFactors.signedFactor(2L, i, trueRank)
         fu.zip(fi).map { case (a, b) => a * b }.sum > 0
       }
     } yield (u.toLong, i.toLong, 1.0f)).toDF("user", "item", "rating")

@@ -32,9 +32,9 @@ class CmfCrossCheckSpec extends SparkSpec {
   private val nItems = 40
   private val nSupps = 20
 
-  private def fu(u: Int) = ConvergenceProbe.signedFactor(1L, u, trueRank)
-  private def fi(i: Int) = ConvergenceProbe.signedFactor(2L, i, trueRank)
-  private def fs(p: Int) = ConvergenceProbe.signedFactor(3L, p, trueRank)
+  private def fu(u: Int) = PlantedFactors.signedFactor(1L, u, trueRank)
+  private def fi(i: Int) = PlantedFactors.signedFactor(2L, i, trueRank)
+  private def fs(p: Int) = PlantedFactors.signedFactor(3L, p, trueRank)
   private def dot(a: Array[Float], b: Array[Float]): Float =
     a.zip(b).map { case (x, y) => x * y }.sum
 

@@ -27,8 +27,8 @@ class CollectiveALSSpec extends SparkSpec {
       i <- 0 until nItems
       if CollectiveALS.splitmix64(u * 10007L + i) % 2 == 0
     } yield {
-      val fu = ConvergenceProbe.signedFactor(1L, u, trueRank)
-      val fi = ConvergenceProbe.signedFactor(2L, i, trueRank)
+      val fu = PlantedFactors.signedFactor(1L, u, trueRank)
+      val fi = PlantedFactors.signedFactor(2L, i, trueRank)
       val r = fu.zip(fi).map { case (a, b) => a * b }.sum * 5.0f
       (u.toLong, i.toLong, r)
     }
@@ -56,8 +56,8 @@ class CollectiveALSSpec extends SparkSpec {
       u <- 0 until nUsers
       i <- 0 until nItems
       if {
-        val fu = ConvergenceProbe.signedFactor(1L, u, trueRank)
-        val fi = ConvergenceProbe.signedFactor(2L, i, trueRank)
+        val fu = PlantedFactors.signedFactor(1L, u, trueRank)
+        val fi = PlantedFactors.signedFactor(2L, i, trueRank)
         fu.zip(fi).map { case (a, b) => a * b }.sum > 0
       }
     } yield (u.toLong, i.toLong, 1.0f)
@@ -85,8 +85,8 @@ class CollectiveALSSpec extends SparkSpec {
       u <- 0 until nUsers
       i <- 0 until nItems
       if {
-        val fu = ConvergenceProbe.signedFactor(1L, u, trueRank)
-        val fi = ConvergenceProbe.signedFactor(2L, i, trueRank)
+        val fu = PlantedFactors.signedFactor(1L, u, trueRank)
+        val fi = PlantedFactors.signedFactor(2L, i, trueRank)
         fu.zip(fi).map { case (a, b) => a * b }.sum <= 0
       }
     } yield (u.toLong, i.toLong)
@@ -106,8 +106,8 @@ class CollectiveALSSpec extends SparkSpec {
       i <- 0 until nItems
       t <- 0 until 10
       if {
-        val fi = ConvergenceProbe.signedFactor(2L, i, trueRank)
-        val ft = ConvergenceProbe.signedFactor(3L, t, trueRank)
+        val fi = PlantedFactors.signedFactor(2L, i, trueRank)
+        val ft = PlantedFactors.signedFactor(3L, t, trueRank)
         fi.zip(ft).map { case (a, b) => a * b }.sum > 0
       }
     } yield (i.toLong, t.toLong, 1.0f)).toDF("item", "tag", "rating")
@@ -212,6 +212,28 @@ class CollectiveALSSpec extends SparkSpec {
         new CollectiveALS().setRank(2).setMaxIter(1).fit(bad)
       }
       assert(err2.getMessage.contains("numeric"), err2.getMessage)
+    }
+  }
+
+  test("a failed explicit-block id audit releases every layout it persisted") {
+    // setNumBlocks skips fit()'s stats pass, so the id check runs as the
+    // audit on the already-persisted rating layouts inside fitWith.
+    val bad = Seq(("u1", 1L, 1.0f), ("u2", 2L, 2.0f)).toDF("user", "item", "rating")
+    def failsClean(expected: Class[_ <: Exception], needle: String): Unit = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val err = intercept[Exception] {
+        new CollectiveALS().setRank(2).setMaxIter(1).setNumBlocks(2).fit(bad)
+      }
+      assert(expected.isInstance(err), err.toString)
+      assert(err.getMessage.contains(needle), err.getMessage)
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"RDDs left persisted by the failed fit: $leaked")
+    }
+    withSQLConf("spark.sql.ansi.enabled" -> "true") {
+      failsClean(classOf[Exception], "CAST_INVALID_INPUT")
+    }
+    withSQLConf("spark.sql.ansi.enabled" -> "false") {
+      failsClean(classOf[IllegalArgumentException], "numeric")
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 
 /** ArrayDot (native codegen expression) vs the composable
@@ -90,5 +91,19 @@ class ArrayDotSpec extends SparkSpec {
       .head.getDouble(0)
     val want = (1 to 1000).map(i => i * 0.001 * 1.0 + 1.0 * i * 0.002).sum
     assert(math.abs(s - want) < 1e-9)
+  }
+
+  test("array_dot compiles inside a whole-stage codegen stage") {
+    // Range input: over a local Seq the optimizer folds the projection
+    // into a LocalRelation and the expression never reaches codegen.
+    val q = spark.range(100)
+      .select(array(col("id").cast("double"), lit(1.0)).as("a"))
+      .select(graft.functions.array_dot(col("a"), col("a")).as("d"))
+      .filter(col("d") > 1.0)
+    val plan = q.queryExecution.executedPlan
+    val codegenned = plan.collect { case w: WholeStageCodegenExec => w.child }
+      .exists(_.exists(_.expressions.exists(_.exists(_.isInstanceOf[ArrayDot]))))
+    assert(codegenned, plan.treeString)
+    assert(q.count() === 99L)
   }
 }

@@ -12,8 +12,8 @@ import graft.{SparkSpec, Tables}
   * failure. The analytic bound is per-pair miss ≤ (1−p⁴)⁶⁴ ≈ 6·10⁻⁵ at
   * θ = 0.35 (see the recall argument at the bandedCosinePairs
   * declaration). sf0.1 — the scale point the per-round bench actually
-  * runs — is gated here too (round-15 verdict item; it was previously
-  * only probe-measured by [[LshRecallProbe]]): its corpus is 2,000
+  * runs — is gated here too (round-15 verdict item; before that only a
+  * one-off recall probe measured it): its corpus is 2,000
   * vectors, so the exact enumerator is ~4M candidate pairs and stays
   * test-budget cheap. */
 class LshRecallSpec extends SparkSpec {

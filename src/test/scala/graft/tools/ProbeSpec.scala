@@ -1,0 +1,43 @@
+package graft.tools
+
+import graft.SparkSpec
+
+/** Smoke test of each `Probe` mode on one query and one Bench `_mat_*`
+  * entry. */
+class ProbeSpec extends SparkSpec {
+  private val dir = "/root/testdata/sf0.001"
+  private val names = Seq("q1_agg", "_mat_corated")
+
+  private def probe(mode: String): Seq[String] = {
+    val lines = Probe.run(spark, dir, mode, names)
+    assert(!lines.exists(_.contains("\tERROR\t")), lines.mkString("\n"))
+    lines
+  }
+
+  test("time reports 2 reps per name under its header") {
+    val lines = probe("time")
+    assert(lines.head === "name\trep\tbuild_ms\tplan_ms\texec_ms\tgc_ms\tjit_ms")
+    assert(lines.tail.map(_.split("\t").take(2).mkString(" ")) ===
+      Seq("q1_agg 1", "q1_agg 2", "_mat_corated 1", "_mat_corated 2"))
+  }
+
+  test("stages reports per-stage rows and one summary per name under its header") {
+    val lines = probe("stages")
+    assert(lines.head.startsWith("name\tstage\ttasks\twall_ms\t"))
+    assert(lines.exists(_.matches("q1_agg\t\\d+\t.*")), lines.mkString("\n"))
+    for (n <- names)
+      assert(lines.count(l => l.startsWith(s"$n\tall\t") && l.contains("\tmax_width=")) === 1)
+  }
+
+  test("explain prints the formatted plan of a query") {
+    val lines = probe("explain")
+    assert(lines.head === "== explain q1_agg ==")
+    assert(lines.exists(_.contains("Physical Plan")), lines.mkString("\n"))
+    assert(lines.contains("== explain _mat_corated =="))
+  }
+
+  test("unknown modes and names are rejected before anything runs") {
+    intercept[IllegalArgumentException](Probe.run(spark, dir, "width", names))
+    intercept[IllegalArgumentException](Probe.run(spark, dir, "time", Seq("no_such_query")))
+  }
+}
