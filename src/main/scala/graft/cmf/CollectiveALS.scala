@@ -1,6 +1,11 @@
 package graft.cmf
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions}
+import scala.collection.mutable
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -11,34 +16,39 @@ import org.apache.spark.storage.StorageLevel
   * (`/root/reference/src/main/scala/com/github/jongwook/cmf/CollectiveALS.scala:94-133`):
   * multi-relation `fit(("user","item") -> r1, ("item","tag") -> r2)`,
   * explicit and implicit (Hu-Koren) preferences, per-relation
-  * normal-equation merge, λ·n ALS-WR regularization, optional NNLS — but
-  * re-expressed Spark-first instead of the reference's hand-built
-  * RatingBlock/InBlock/OutBlock RDD routing:
+  * normal-equation merge, λ·n ALS-WR regularization, optional NNLS — and
+  * the reference's blocked communication pattern (RatingBlock →
+  * InBlock/OutBlock; Zhou et al. 2008):
   *
-  *  - per half-iteration, for entity e: every incident relation is joined
-  *    ratings ⋈ factors(other side) on the other side's id, unioned, and
-  *    aggregated `groupBy(e-id)` with a typed normal-equation Aggregator
-  *    ([[NormalEqAggregator]]). Map-side partial aggregation collapses each
-  *    partition to ≤ |distinct ids| packed buffers before the shuffle —
-  *    the reference's block-communication bound, with Catalyst planning
-  *    the exchanges;
-  *  - each relation's ratings are cached pre-hash-partitioned by BOTH of
-  *    its key columns (the analogue of the reference's two block layouts),
-  *    so the big ratings side never re-shuffles across iterations — only
-  *    the factor tables (|entities|·k floats) move per half-step, which is
-  *    the ALS lower bound;
-  *  - solving is `mapPartitions` over the aggregated equations — O(k³)
-  *    local work per id with scratch reuse ([[CholeskySolver]] /
-  *    [[NnlsSolver]]);
-  *  - factor lineage is truncated per half-step with eager
-  *    `localCheckpoint`, keeping plans O(1) across iterations.
+  *  - once per fit, every relation's rating rows are shuffled into the
+  *    blocks of both of its entities ([[CollectiveALS.Block]]): each block
+  *    holds its ids' incident ratings sorted by (dst, relation, src) in
+  *    primitive arrays (the in-block), and for every relation side where
+  *    the entity is the source, which destination blocks need which of
+  *    its ids (the out-routes). The upstream rating pipeline runs once;
+  *  - per half-iteration, for entity e: each source block sends each
+  *    needed factor once per (src id, dst block) — the id plus k floats —
+  *    and each destination block builds every normal equation locally,
+  *    one destination at a time in O(k²) memory, and solves it
+  *    ([[CholeskySolver]] / [[NnlsSolver]]). Normal equations never cross
+  *    the wire: the half-step shuffles only factors, which is the ALS
+  *    communication lower bound;
+  *  - the block counts are explicit partitioners, so a fit never touches
+  *    the session conf and concurrent fits on one session need no lock;
+  *  - the fixed summation order (sorted in-blocks, per-block Gram partials
+  *    summed in block order) makes a fit bitwise reproducible for a given
+  *    seed and block geometry;
+  *  - factor lineage is truncated with eager local checkpoints.
   *
-  * Scale notes (100 TB): ratings are never collected or crossed; every
-  * stage is join-shuffle-agg keyed by an entity id, so AQE's skew-join
-  * handles power-law ids on the join side and partial aggregation bounds
-  * the agg side. Ids are Long end-to-end (the reference caps at Int).
+  * Scale notes (100 TB): ratings are never collected or crossed. Per
+  * half-step the shuffle is |factor ids| × (fan-out to destination blocks)
+  * × (8 + 4k) bytes, independent of the rating count; the equation work
+  * per block is proportional to its ratings. A power-law id lands all of
+  * its ratings in one block — blocks are hash-sized, not degree-balanced.
+  * Ids are Long end-to-end (the reference caps at Int).
   */
 class CollectiveALS(entityNames: String*) extends Serializable {
+  import CollectiveALS._
 
   private val cols: Array[String] = entityNames.size match {
     case 0 => Array("user", "item")
@@ -55,9 +65,8 @@ class CollectiveALS(entityNames: String*) extends Serializable {
   var ratingCol: String = "rating"
   var predictionCol: String = "prediction"
   var seed: Long = this.getClass.getName.hashCode.toLong
-  /** Optional explicit shuffle parallelism for the cached rating layouts
-    * (the analogue of the reference's per-entity block counts). Default:
-    * let Catalyst/AQE size the exchanges. */
+  /** Optional explicit block count for every entity (the reference's
+    * `setNumBlocks`). Default: sized to the data. */
   var numPartitions: Option[Int] = None
   /** Per-entity overrides of [[numPartitions]] (reference:
     * `setNumBlocks(index, value)`), keyed by entity index. */
@@ -67,8 +76,8 @@ class CollectiveALS(entityNames: String*) extends Serializable {
     * iterations; off-interval factors are eagerly persisted at
     * [[intermediateStorageLevel]]. 1 (default) = every half-step. */
   var checkpointInterval: Int = 1
-  /** Storage level for in-loop state: rating layouts + intermediate
-    * factor tables. */
+  /** Storage level for in-loop state: rating blocks + intermediate
+    * factor blocks. */
   var intermediateStorageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK
   /** Storage level for the returned (last-iteration) factor tables. */
   var finalStorageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK
@@ -99,8 +108,6 @@ class CollectiveALS(entityNames: String*) extends Serializable {
   def setItemCol(value: String): this.type = { cols(1) = value; this }
   def setEntityCol(index: Int, value: String): this.type = { cols(index) = value; this }
 
-  private case class Rel(idx: Int, left: Int, right: Int, byLeft: DataFrame, byRight: DataFrame)
-
   /** Two-entity convenience fit on (userCol, itemCol, ratingCol). */
   def fit(dataset: DataFrame): CollectiveALSModel = fit((cols(0), cols(1)) -> dataset)
 
@@ -110,8 +117,8 @@ class CollectiveALS(entityNames: String*) extends Serializable {
   def fit(datasets: ((String, String), DataFrame)*): CollectiveALSModel = {
     require(datasets.nonEmpty, "at least one relation required")
     require(datasets.size <= 64, "at most 64 relations supported")
-    // Entity names must be validated BEFORE the pre-fit stats pass below
-    // touches the dataframes: an undeclared entity must fail fast as an
+    // Entity names must be validated before anything touches the
+    // dataframes: an undeclared entity must fail fast as an
     // IllegalArgumentException, not surface as an analysis error from a
     // missing column.
     datasets.foreach { case ((l, r), _) =>
@@ -119,254 +126,405 @@ class CollectiveALS(entityNames: String*) extends Serializable {
       require(cols.contains(r), s"Unknown entity: $r")
     }
     val spark = datasets.head._2.sparkSession
-    // Block count for every fit-internal exchange (rating layouts, the
-    // per-half-iteration join + normal-equation agg, factor init):
-    // explicit setNumBlocks wins; otherwise size to the data — ~100k
-    // rating rows per block (a few MB of shuffle per task), clamped to
-    // the session's parallelism. Big relations use the cluster's full
-    // width; small ones stop paying 32-way task overhead on near-empty
-    // exchanges across maxIter × entities shuffles (MLlib's ALS derives
-    // its block count from the input partitioning for the same reason).
-    // Scoped via the session shuffle-partition conf (the only way to
-    // reach groupBy exchanges) and restored after the fit; counting the
-    // inputs runs their upstream pipelines once — cache ratings first if
-    // they are expensive to derive (the queries layer does). The swap is
-    // session-global: a fit is a single-owner operation — queries planned
-    // concurrently on the same SparkSession during a fit would pick up
-    // the fit's block count.
-    // Serialize fits per session: two concurrent swaps could interleave
-    // save/restore and leave the session conf permanently wrong. The lock
-    // is a private per-session object, NOT the session's own monitor —
-    // SparkSession lazy-val initialization synchronizes on `this`, so
-    // holding that monitor for a multi-minute fit would stall unrelated
-    // threads touching the same session.
-    CollectiveALS.fitLock(spark).synchronized {
-      val sessionShuffle = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      // ONE stats pass per relation serves both pre-fit obligations that
-      // used to be separate jobs: the row count behind the adaptive block
-      // sizing AND the checked id cast (a non-numeric id casts to null,
-      // which would silently merge all such rows into one normal
-      // equation — reference semantics: fail instead). Same error
-      // contract as before: ANSI-on surfaces the engine's
-      // CAST_INVALID_INPUT from inside the aggregate; ANSI-off trips the
-      // require as an IllegalArgumentException naming "numeric".
-      // When numPartitions is explicit the row count has no consumer —
-      // skip the full raw-input pass entirely and run the id audit as a
-      // cheap limit(1) probe on the CACHED layout inside fitWith (the
-      // layout materializes for the fit anyway), so numPartitions-set
-      // callers with expensive un-materialized inputs don't pay an extra
-      // full pipeline execution.
-      val fitShuffle = numPartitions.getOrElse {
-        val totalRows = datasets.iterator.map { case ((l, r), df) =>
-          val st = df.agg(
-            count(lit(1)),
-            sum(when(col(l).cast("long").isNull || col(r).cast("long").isNull,
-              1L).otherwise(0L))).head()
-          require(st.isNullAt(1) || st.getLong(1) == 0L,
-            s"relation ($l, $r): entity ids must be numeric (cast to long produced null)")
-          st.getLong(0)
-        }.sum
-        math.max(1L, math.min(sessionShuffle.toLong, totalRows / 100000L + 1)).toInt
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", fitShuffle)
-      // Every frame the fit persists (rating layouts, in-loop factors) is
-      // released here whether the fit returns or throws: a failed id
-      // audit or iteration must not leave them cached. The returned
-      // model's factors are checkpoints, not persisted frames.
-      val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      try fitWith(spark, datasets, held, auditIds = numPartitions.isDefined)
-      finally {
-        held.foreach(_.unpersist(false))
-        spark.conf.set("spark.sql.shuffle.partitions", sessionShuffle)
-      }
+    // Block count per entity: setNumBlocks(index, n), then setNumBlocks(n);
+    // otherwise size to the data — ~100k rating rows per block, clamped to
+    // the session's shuffle parallelism (MLlib's ALS derives its block
+    // count from the input for the same reason). The count runs each
+    // relation's upstream pipeline once more — cache ratings first if they
+    // are expensive to derive (the queries layer does).
+    lazy val adaptive = {
+      val totalRows = datasets.iterator.map(_._2.count()).sum
+      val parallelism = spark.conf.get("spark.sql.shuffle.partitions").toLong
+      math.max(1L, math.min(parallelism, totalRows / 100000L + 1)).toInt
+    }
+    val blocks = cols.indices.map { e =>
+      numPartitionsPerEntity.get(e).orElse(numPartitions).getOrElse(adaptive)
+    }.toArray
+    // Every RDD the fit persists (rating blocks, in-loop factor blocks) is
+    // released here whether the fit returns or throws; a failed fit also
+    // releases the model tables it had already checkpointed.
+    val held = mutable.ArrayBuffer.empty[RDD[_]]
+    val tables = mutable.ArrayBuffer.empty[DataFrame]
+    var done = false
+    try {
+      val model = fitWith(spark, datasets, blocks, held, tables)
+      done = true
+      model
+    } finally {
+      held.foreach(_.unpersist(false))
+      if (!done) tables.foreach(t => checkpointOf(t).foreach(_.unpersist(false)))
     }
   }
 
   private def fitWith(
       spark: SparkSession,
       datasets: Seq[((String, String), DataFrame)],
-      held: scala.collection.mutable.Buffer[DataFrame],
-      auditIds: Boolean): CollectiveALSModel = {
+      blocks: Array[Int],
+      held: mutable.Buffer[RDD[_]],
+      tables: mutable.Buffer[DataFrame]): CollectiveALSModel = {
+    val sc = spark.sparkContext
+    val k = rank
+    val rels = datasets.map { case ((l, r), _) => (cols.indexOf(l), cols.indexOf(r)) }.toArray
+    // Side 2i is relation i seen from its left entity (dst = left id,
+    // src = right id); side 2i+1 from its right entity.
+    val sideDst = Array.tabulate(2 * rels.length)(s => if (s % 2 == 0) rels(s / 2)._1 else rels(s / 2)._2)
+    val sideSrc = Array.tabulate(2 * rels.length)(s => if (s % 2 == 0) rels(s / 2)._2 else rels(s / 2)._1)
+    cols.indices.foreach(e => require(sideDst.contains(e), s"entity ${cols(e)} appears in no relation"))
+    val offsets = blocks.scanLeft(0)(_ + _) // entity e owns partitions [offsets(e), offsets(e + 1))
+    val srcBlocks = sideSrc.map(blocks)
+
+    // Rating blocks: one shuffle of every relation's rows into the blocks
+    // of both of its entities.
     val ratingExpr = if (ratingCol.nonEmpty) col(ratingCol).cast("float") else lit(1.0f)
-
-    // Pre-project and cache each relation in both hash layouts.
-    val rels: Seq[Rel] = datasets.zipWithIndex.map { case (((l, r), df), idx) =>
-      val li = cols.indexOf(l)
-      val ri = cols.indexOf(r)
-      require(li >= 0, s"Unknown entity: $l")
-      require(ri >= 0, s"Unknown entity: $r")
-      val data = df.select(
-        col(l).cast("long").as("leftId"),
-        col(r).cast("long").as("rightId"),
-        ratingExpr.as("rating"))
-      def layout(src: DataFrame, key: String, entity: Int) = {
-        val df = numPartitionsPerEntity.get(entity).orElse(numPartitions)
-          .map(n => src.repartition(n, col(key)))
-          .getOrElse(src.repartition(col(key)))
-          .persist(intermediateStorageLevel)
-        held += df
-        df
+    val nullIds = datasets.map(_ => sc.longAccumulator)
+    val chunks = datasets.zipWithIndex.map { case (((l, r), df), i) =>
+      val rows = df.select(col(l).cast("long"), col(r).cast("long"), ratingExpr).rdd
+      val (li, ri) = rels(i)
+      val (ln, rn, lo, ro) = (blocks(li), blocks(ri), offsets(li), offsets(ri))
+      val nulls = nullIds(i)
+      val total = offsets.last
+      rows.mapPartitions { it =>
+        val out = new ChunkBuffers(total)
+        it.flatMap { row =>
+          if (row.isNullAt(0) || row.isNullAt(1)) { nulls.add(1L); Iterator.empty }
+          else {
+            val (lid, rid, v) = (row.getLong(0), row.getLong(1), row.getFloat(2))
+            out.add(lo + blockOf(lid, ln), 2 * i, lid, rid, v) ++
+              out.add(ro + blockOf(rid, rn), 2 * i + 1, rid, lid, v)
+          }
+        } ++ out.flush()
       }
-      // The second layout re-shuffles the FIRST layout's cache, so the
-      // upstream rating pipeline (often a join+agg) executes once, not
-      // once per layout.
-      val byLeft = layout(data, "leftId", li)
-      val byRight = layout(byLeft, "rightId", ri)
-      // Checked id cast: folded into fit()'s pre-fit stats pass when the
-      // block count is adaptive; with explicit numPartitions that pass is
-      // skipped, so audit here with a limit(1) probe on the cached layout
-      // (materializes the cache the fit needs anyway — no extra pipeline
-      // execution; same IllegalArgumentException("numeric") contract).
-      if (auditIds) {
-        val bad = byLeft
-          .filter(col("leftId").isNull || col("rightId").isNull)
-          .limit(1).count()
-        require(bad == 0L,
-          s"relation ($l, $r): entity ids must be numeric (cast to long produced null)")
-      }
-      Rel(idx, li, ri, byLeft, byRight)
-    }.toSeq
-
-    // Deterministic per-id factor init (abs-Gaussian, unit norm) for every
-    // id observed in any incident relation.
-    val factors = new Array[DataFrame](cols.length)
-    for (e <- cols.indices) {
-      val sides = rels.flatMap { rel =>
-        (if (rel.left == e) Seq(rel.byLeft.select(col("leftId").as("id"))) else Nil) ++
-          (if (rel.right == e) Seq(rel.byRight.select(col("rightId").as("id"))) else Nil)
-      }
-      require(sides.nonEmpty, s"entity ${cols(e)} appears in no relation")
-      val ids = sides.reduce(_ unionAll _).distinct()
-      factors(e) = initFactors(spark, ids, CollectiveALS.splitmix64(seed + e))
-        .localCheckpoint(true)
     }
+    val all = sc.union(chunks).partitionBy(new HashPartitioner(offsets.last))
+      .mapPartitions(it => Iterator.single(Block.build(it.map(_._2), srcBlocks)))
+      .persist(intermediateStorageLevel)
+    held += all
+    all.count()
+    // Checked id cast: a non-numeric id casts to null, which must fail the
+    // fit rather than merge silently (ANSI on fails inside the job above
+    // with the engine's CAST_INVALID_INPUT).
+    datasets.zip(nullIds).foreach { case (((l, r), _), n) =>
+      require(n.value == 0L,
+        s"relation ($l, $r): entity ids must be numeric (cast to long produced null)")
+    }
+    val layout: Array[RDD[Block]] = cols.indices.map { e =>
+      PartitionPruningRDD.create(all, p => p >= offsets(e) && p < offsets(e + 1)): RDD[Block]
+    }.toArray
 
-    val neUdaf = functions.udaf(new NormalEqAggregator(rank, implicitPrefs, alpha))
-    // Gram aggregation must run in explicit mode: the implicit aggregator
-    // ignores r <= 0 rows, and the YtY probe feeds rating 0.
-    val gramUdaf = functions.udaf(new NormalEqAggregator(rank, false, 1.0))
+    // Deterministic per-id init (abs-Gaussian, unit norm), computed from the
+    // blocks' ids wherever it is read.
+    val factors: Array[RDD[Array[Float]]] = cols.indices.map { e =>
+      val s = splitmix64(seed + e)
+      layout(e).map { b =>
+        val out = new Array[Float](b.ids.length * k)
+        var d = 0
+        while (d < b.ids.length) {
+          System.arraycopy(initFactor(s, b.ids(d), k), 0, out, d * k, k)
+          d += 1
+        }
+        out
+      }
+    }.toArray
 
+    val (nn, reg, implicitP, a) = (nonnegative, regParam, implicitPrefs, alpha)
     for (iter <- 0 until maxIter; e <- cols.indices) {
-      // Union the (id, srcFactor, rating, relIdx) contributions of every
-      // relation incident to entity e.
-      val contribs = rels.flatMap { rel =>
-        val parts = scala.collection.mutable.Buffer.empty[DataFrame]
-        if (rel.left == e) {
-          val f = factors(rel.right).hint("shuffle_hash")
-          parts += rel.byRight.join(f, col("rightId") === f("id"))
-            .select(col("leftId").as("id"), f("features").as("features"),
-              col("rating"), lit(rel.idx).as("rel"))
-        }
-        if (rel.right == e) {
-          val f = factors(rel.left).hint("shuffle_hash")
-          parts += rel.byLeft.join(f, col("leftId") === f("id"))
-            .select(col("rightId").as("id"), f("features").as("features"),
-              col("rating"), lit(rel.idx).as("rel"))
-        }
-        parts
-      }
-      if (contribs.nonEmpty) {
-        val grouped = contribs.reduce(_ unionAll _)
-          .groupBy("id")
-          .agg(neUdaf(col("features"), col("rating"), col("rel")).as("ne"))
-        // Implicit prefs: the YtY Gram of each incident relation's src-side
-        // factors (restricted to the src ids actually present in that
-        // relation, matching the reference's per-relation srcFactorBlock).
-        // All incident relations ride ONE union + grouped aggregation, so
-        // the driver pays one collect job per (entity, iteration) — k(k+1)/2
-        // doubles per relation — instead of one job per relation.
-        val yty: Map[Int, Array[Double]] =
-          if (!implicitPrefs) Map.empty
-          else {
-            val tagged = rels.flatMap { rel =>
-              if (rel.left != e && rel.right != e) None
-              else {
-                val (srcIdx, srcIds) =
-                  if (rel.left == e) (rel.right, rel.byRight.select(col("rightId").as("id")))
-                  else (rel.left, rel.byLeft.select(col("leftId").as("id")))
-                Some(factors(srcIdx).join(srcIds, Seq("id"), "left_semi")
-                  .select(col("features"), lit(rel.idx).as("relIdx")))
-              }
+      val sides = sideDst.indices.filter(sideDst(_) == e)
+      // Implicit prefs: per incident relation, the YtY Gram of the source
+      // factors that relation observes (the reference's per-relation
+      // srcFactorBlock) — one job, block partials summed in block order.
+      val yty: Array[Array[Double]] =
+        if (!implicitP) Array.empty
+        else {
+          val gramSides = sides.map(_ / 2).distinct
+            .map(rel => if (rels(rel)._1 == e) 2 * rel else 2 * rel + 1)
+          val partials = sc.union(gramSides.map { s =>
+            layout(sideSrc(s)).zipPartitions(factors(sideSrc(s))) { (bi, fi) =>
+              Iterator.single((s / 2, bi.next().gram(s, fi.next(), k)))
             }
-            if (tagged.isEmpty) Map.empty
-            else tagged.reduce(_ unionAll _)
-              .groupBy("relIdx")
-              .agg(gramUdaf(col("features"), lit(0.0f), lit(0)).as("ne"))
-              .select(col("relIdx"), col("ne.ata"))
-              .collect()
-              .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-              .toMap
+          }).collect()
+          val out = new Array[Array[Double]](rels.length)
+          partials.foreach { case (rel, g) =>
+            if (out(rel) == null) out(rel) = g
+            else { var i = 0; while (i < g.length) { out(rel)(i) += g(i); i += 1 } }
           }
-        // Lineage policy (reference: setCheckpointInterval /
-        // set{Intermediate,Final}StorageLevel): the last iteration's
-        // factors checkpoint at finalStorageLevel (they ARE the model);
-        // in-loop factors checkpoint at intermediateStorageLevel on
-        // interval boundaries and otherwise eagerly persist (lineage
-        // kept, bounded by the interval).
-        val solved = solveFactors(spark, grouped, yty)
-        val last = iter == maxIter - 1
-        val newF =
-          if (last) solved.localCheckpoint(true, finalStorageLevel)
-          else if ((iter + 1) % checkpointInterval == 0)
-            solved.localCheckpoint(true, intermediateStorageLevel)
-          else {
-            val p = solved.persist(intermediateStorageLevel)
-            held += p
-            p.count() // materialize before the predecessor unpersists
-            p
-          }
-        factors(e).unpersist(false)
-        factors(e) = newF
-      }
-    }
-
-    new CollectiveALSModel(rank, factors.toIndexedSeq, cols.toIndexedSeq, predictionCol)
-  }
-
-  private def initFactors(spark: SparkSession, ids: DataFrame, s: Long): DataFrame = {
-    import spark.implicits._
-    val k = rank
-    ids.select(col("id").cast("long")).as[Long]
-      .mapPartitions { it => it.map(id => (id, CollectiveALS.initFactor(s, id, k))) }
-      .toDF("id", "features")
-  }
-
-  private def solveFactors(
-      spark: SparkSession,
-      grouped: DataFrame,
-      yty: Map[Int, Array[Double]]): DataFrame = {
-    import spark.implicits._
-    val ytyB = spark.sparkContext.broadcast(yty)
-    val nn = nonnegative
-    val reg = regParam
-    val k = rank
-    grouped
-      .select(col("id"), col("ne.ata"), col("ne.atb"), col("ne.n"), col("ne.mask"))
-      .as[(Long, Array[Double], Array[Double], Long, Long)]
-      .mapPartitions { iter =>
+          out
+        }
+      val ytyB = sc.broadcast(yty)
+      val sent = sc.union(sides.map { s =>
+        layout(sideSrc(s)).zipPartitions(factors(sideSrc(s))) { (bi, fi) =>
+          bi.next().send(s, fi.next(), k)
+        }
+      }).partitionBy(new HashPartitioner(blocks(e)))
+      val solved = layout(e).zipPartitions(sent) { (bi, mi) =>
         val solver: LeastSquaresSolver = if (nn) new NnlsSolver(k) else new CholeskySolver(k)
-        val ytys = ytyB.value
-        iter.map { case (id, ata, atb, n, mask) =>
-          ytys.foreach { case (relIdx, g) =>
-            if (((mask >> relIdx) & 1L) == 1L) {
-              var i = 0
-              while (i < ata.length) { ata(i) += g(i); i += 1 }
-            }
-          }
-          (id, solver.solve(ata, atb, n * reg))
-        }
+        Iterator.single(bi.next().solve(mi, k, solver, reg, implicitP, a, ytyB.value))
+      }.persist(intermediateStorageLevel)
+      held += solved
+      // Lineage policy (reference: setCheckpointInterval /
+      // set{Intermediate,Final}StorageLevel): the last iteration's factors
+      // become the model's tables, checkpointed at finalStorageLevel;
+      // in-loop factors checkpoint on interval boundaries and otherwise
+      // stay persisted (lineage kept, bounded by the interval).
+      if (iter == maxIter - 1) tables += table(spark, layout(e), solved, k)
+      else {
+        if ((iter + 1) % checkpointInterval == 0) solved.localCheckpoint()
+        solved.count()
       }
-      .toDF("id", "features")
+      factors(e).unpersist(false)
+      factors(e) = solved
+    }
+    if (maxIter == 0) cols.indices.foreach(e => tables += table(spark, layout(e), factors(e), k))
+    new CollectiveALSModel(rank, tables.toIndexedSeq, cols.toIndexedSeq, predictionCol)
+  }
+
+  /** One entity's (id, features) table, eagerly checkpointed at
+    * [[finalStorageLevel]]. */
+  private def table(spark: SparkSession, layout: RDD[Block], f: RDD[Array[Float]], k: Int): DataFrame = {
+    import spark.implicits._
+    layout.zipPartitions(f) { (bi, fi) =>
+      val b = bi.next()
+      val x = fi.next()
+      Iterator.tabulate(b.ids.length)(d => (b.ids(d), java.util.Arrays.copyOfRange(x, d * k, d * k + k)))
+    }.toDF("id", "features").localCheckpoint(true, finalStorageLevel)
   }
 }
 
 object CollectiveALS {
 
-  // Per-session fit locks (see the fit() conf swap). Weak keys: a lock
-  // dies with its session instead of accumulating across sessions.
-  private val fitLocks = new java.util.WeakHashMap[SparkSession, AnyRef]
-  private def fitLock(s: SparkSession): AnyRef =
-    fitLocks.synchronized(fitLocks.computeIfAbsent(s, _ => new Object))
+  /** Rows per shuffled rating chunk: bounds the map side's buffers at
+    * (total blocks) × this × 24 bytes. */
+  private val ChunkRows = 2048
+
+  /** The block of `id` among `n` blocks of its entity. */
+  private[cmf] def blockOf(id: Long, n: Int): Int = java.lang.Math.floorMod(java.lang.Long.hashCode(id), n)
+
+  /** The persisted RDD behind a checkpointed frame. */
+  private def checkpointOf(df: DataFrame): Option[RDD[_]] =
+    df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
+
+  /** Rating rows bound for one block, columnar: `side`, `dst` (an id of the
+    * block's entity), `src` (an id of the other entity), `rating`. */
+  private[cmf] final class Chunk(
+      val side: Array[Int],
+      val dst: Array[Long],
+      val src: Array[Long],
+      val rating: Array[Float]) extends Serializable
+
+  /** Map-side buffers, one per target partition, each flushed as a
+    * [[Chunk]] every [[ChunkRows]] rows. */
+  private final class ChunkBuffers(total: Int) {
+    private final class Buf {
+      val side = new mutable.ArrayBuilder.ofInt
+      val dst = new mutable.ArrayBuilder.ofLong
+      val src = new mutable.ArrayBuilder.ofLong
+      val rating = new mutable.ArrayBuilder.ofFloat
+      def result(): Chunk = {
+        val c = new Chunk(side.result(), dst.result(), src.result(), rating.result())
+        side.clear(); dst.clear(); src.clear(); rating.clear()
+        c
+      }
+    }
+    private val bufs = Array.fill(total)(new Buf)
+
+    def add(target: Int, side: Int, dst: Long, src: Long, rating: Float): Iterator[(Int, Chunk)] = {
+      val b = bufs(target)
+      b.side += side; b.dst += dst; b.src += src; b.rating += rating
+      if (b.side.length < ChunkRows) Iterator.empty else Iterator.single((target, b.result()))
+    }
+
+    def flush(): Iterator[(Int, Chunk)] =
+      bufs.indices.iterator.filter(bufs(_).side.length > 0).map(t => (t, bufs(t).result()))
+  }
+
+  /** One block of one entity, built once per fit.
+    *
+    * In-block: `ids` (ascending) are the block's entity ids; the ratings of
+    * `ids(d)` are entries `[ptr(d), ptr(d + 1))`, sorted by (side, source,
+    * rating), each naming its relation side and the index of its source id
+    * in `srcIds(side)` (the side's source ids rated in this block,
+    * ascending; null for sides with no rating here). Out-routes: for every
+    * side whose source is this entity, `routes(side)` lists (destination
+    * block, indices into `ids`) — each factor this block must send, once
+    * per destination block. */
+  private[cmf] final class Block(
+      val ids: Array[Long],
+      val ptr: Array[Int],
+      val side: Array[Int],
+      val src: Array[Int],
+      val rating: Array[Float],
+      val srcIds: Array[Array[Long]],
+      val routes: Array[Array[(Int, Array[Int])]]) extends Serializable {
+
+    /** One message per destination block that needs factors of `s`'s
+      * source ids from this block: (dst block, (side, ids, k floats per id)). */
+    def send(s: Int, f: Array[Float], k: Int): Iterator[(Int, (Int, Array[Long], Array[Float]))] =
+      routes(s).iterator.map { case (dstBlock, idx) =>
+        val feats = new Array[Float](idx.length * k)
+        var j = 0
+        while (j < idx.length) { System.arraycopy(f, idx(j) * k, feats, j * k, k); j += 1 }
+        (dstBlock, (s, idx.map(ids), feats))
+      }
+
+    /** Σ f fᵀ over this block's factors that side `s` sends anywhere. */
+    def gram(s: Int, f: Array[Float], k: Int): Array[Double] = {
+      val used = new Array[Boolean](ids.length)
+      routes(s).foreach(_._2.foreach(used(_) = true))
+      val g = new Array[Double](k * (k + 1) / 2)
+      var d = 0
+      while (d < ids.length) {
+        if (used(d)) NormalEq.addOuter(g, f, d * k, k, 1.0)
+        d += 1
+      }
+      g
+    }
+
+    /** Builds and solves every id's normal equation from the received
+      * source factors, one id at a time, into k floats per id. */
+    def solve(
+        received: Iterator[(Int, (Int, Array[Long], Array[Float]))],
+        k: Int,
+        solver: LeastSquaresSolver,
+        reg: Double,
+        implicitPrefs: Boolean,
+        alpha: Double,
+        yty: Array[Array[Double]]): Array[Float] = {
+      val feats = srcIds.map(s => if (s == null) null else new Array[Float](s.length * k))
+      received.foreach { case (_, (s, sent, f)) =>
+        var j = 0
+        while (j < sent.length) {
+          val at = java.util.Arrays.binarySearch(srcIds(s), sent(j))
+          System.arraycopy(f, j * k, feats(s), at * k, k)
+          j += 1
+        }
+      }
+      val ata = new Array[Double](k * (k + 1) / 2)
+      val atb = new Array[Double](k)
+      val out = new Array[Float](ids.length * k)
+      var d = 0
+      while (d < ids.length) {
+        java.util.Arrays.fill(ata, 0.0)
+        java.util.Arrays.fill(atb, 0.0)
+        var n = 0L
+        var mask = 0L
+        var t = ptr(d)
+        while (t < ptr(d + 1)) {
+          val f = feats(side(t))
+          val off = src(t) * k
+          val r = rating(t)
+          mask |= 1L << (side(t) / 2)
+          // Same rule as NormalEqAggregator.reduce.
+          if (!implicitPrefs) {
+            NormalEq.addOuter(ata, f, off, k, 1.0)
+            if (r != 0.0f) NormalEq.axpy(atb, f, off, k, r.toDouble)
+            n += 1
+          } else if (r > 0.0f) {
+            val c1 = alpha * math.abs(r.toDouble)
+            NormalEq.addOuter(ata, f, off, k, c1)
+            NormalEq.axpy(atb, f, off, k, c1 + 1.0)
+            n += 1
+          }
+          t += 1
+        }
+        var rel = 0
+        while (rel < yty.length) {
+          if (yty(rel) != null && ((mask >> rel) & 1L) == 1L) {
+            val g = yty(rel)
+            var i = 0
+            while (i < ata.length) { ata(i) += g(i); i += 1 }
+          }
+          rel += 1
+        }
+        System.arraycopy(solver.solve(ata, atb, n * reg), 0, out, d * k, k)
+        d += 1
+      }
+      out
+    }
+  }
+
+  private[cmf] object Block {
+    /** Sorts one partition's chunks into a [[Block]]; `srcBlocks(side)` is
+      * the block count of the side's source entity. */
+    def build(chunks: Iterator[Chunk], srcBlocks: Array[Int]): Block = {
+      val cs = chunks.toArray
+      val side = Array.concat(cs.map(_.side): _*)
+      val dst = Array.concat(cs.map(_.dst): _*)
+      val src = Array.concat(cs.map(_.src): _*)
+      val rating = Array.concat(cs.map(_.rating): _*)
+      val n = side.length
+      val ids = sortedDistinct(dst)
+      val bySide = Array.tabulate(srcBlocks.length)(s => Array.range(0, n).filter(side(_) == s))
+      val srcIds = bySide.map(ts => if (ts.isEmpty) null else sortedDistinct(ts.map(src)))
+      val dstAt = new Array[Int](n)
+      val srcAt = new Array[Int](n)
+      var t = 0
+      while (t < n) {
+        dstAt(t) = java.util.Arrays.binarySearch(ids, dst(t))
+        srcAt(t) = java.util.Arrays.binarySearch(srcIds(side(t)), src(t))
+        t += 1
+      }
+      // Order by (side, src) with a primitive sort of (rank << 32 | entry),
+      // then stably by dst with a counting sort, which also yields ptr.
+      val srcBase = srcIds.scanLeft(0)((acc, ids) => acc + (if (ids == null) 0 else ids.length))
+      val keys = Array.tabulate(n)(t => ((srcBase(side(t)) + srcAt(t)).toLong << 32) | t)
+      java.util.Arrays.sort(keys)
+      val ptr = new Array[Int](ids.length + 1)
+      dstAt.foreach(d => ptr(d + 1) += 1)
+      var d = 0
+      while (d < ids.length) { ptr(d + 1) += ptr(d); d += 1 }
+      val next = ptr.clone()
+      val order = new Array[Int](n)
+      keys.foreach { key =>
+        val e = key.toInt
+        order(next(dstAt(e))) = e
+        next(dstAt(e)) += 1
+      }
+      val sides = order.map(side)
+      val srcs = order.map(srcAt)
+      val ratings = order.map(rating)
+      // Repeated (dst, side, src) entries differ only in rating: sort those
+      // runs by rating so the summation order never depends on arrival.
+      d = 0
+      while (d < ids.length) {
+        var from = ptr(d)
+        while (from < ptr(d + 1)) {
+          var to = from + 1
+          while (to < ptr(d + 1) && sides(to) == sides(from) && srcs(to) == srcs(from)) to += 1
+          if (to - from > 1) java.util.Arrays.sort(ratings, from, to)
+          from = to
+        }
+        d += 1
+      }
+      // An entry (side s, dst d, src x) means d, as a source of the
+      // opposite side s ^ 1, is needed by the block holding x.
+      val routes = Array.fill(srcBlocks.length)(Array.empty[(Int, Array[Int])])
+      for (s <- srcBlocks.indices if srcIds(s) != null) {
+        val pairs = sortedDistinct(bySide(s).map(t => (blockOf(src(t), srcBlocks(s)).toLong << 32) | dstAt(t)))
+        val route = mutable.ArrayBuffer.empty[(Int, Array[Int])]
+        var from = 0
+        while (from < pairs.length) {
+          val b = (pairs(from) >>> 32).toInt
+          var to = from
+          while (to < pairs.length && (pairs(to) >>> 32).toInt == b) to += 1
+          route += ((b, pairs.slice(from, to).map(_.toInt)))
+          from = to
+        }
+        routes(s ^ 1) = route.toArray
+      }
+      new Block(ids, ptr, sides, srcs, ratings, srcIds, routes)
+    }
+
+    private def sortedDistinct(xs: Array[Long]): Array[Long] = {
+      val s = xs.clone()
+      java.util.Arrays.sort(s)
+      var n = 0
+      var i = 0
+      while (i < s.length) {
+        if (n == 0 || s(i) != s(n - 1)) { s(n) = s(i); n += 1 }
+        i += 1
+      }
+      java.util.Arrays.copyOf(s, n)
+    }
+  }
 
   /** SplitMix64 — public-domain mixing function (Steele et al.),
     * deterministic across partitioning. */

@@ -83,10 +83,10 @@ class CollectiveALSModel(
     * solved against the FROZEN `srcEntity` factors from the supplied
     * ratings only — one half-iteration of ALS restricted to the new rows,
     * the standard way to serve a cold user without refitting. Uses the
-    * estimator's own normal-equation aggregator and solvers, so λ·n
-    * (ALS-WR) regularization, Hu-Koren implicit confidence (with the
-    * observed-src-restricted YtY Gram), and the NNLS option all behave
-    * exactly as in `fit`.
+    * estimator's normal-equation rules ([[NormalEqAggregator]]) and
+    * solvers, so λ·n (ALS-WR) regularization, Hu-Koren implicit
+    * confidence (with the observed-src-restricted YtY Gram), and the NNLS
+    * option all behave exactly as in `fit`.
     *
     * Scale: one shuffle-hash join of the new ratings against the frozen
     * src factor table + one groupBy(id) with map-side partial normal-

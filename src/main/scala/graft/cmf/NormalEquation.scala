@@ -14,10 +14,14 @@ import org.apache.spark.sql.{Encoder, Encoders}
   *
   * Same math as the reference's NormalEquation
   * (`/root/reference/src/main/scala/com/github/jongwook/cmf/CollectiveALS.scala:504-560`),
-  * but carried as a Spark SQL aggregation buffer instead of a hand-routed
-  * RDD block: partial (map-side) aggregation collapses every partition to
-  * one buffer per distinct id before the shuffle, which is the same
-  * communication bound as the reference's InBlock/OutBlock design.
+  * and like the reference [[CollectiveALS]] builds these in place inside
+  * each destination block from routed source factors (`addOuter`/`axpy`
+  * over a flat factor buffer), so they never cross a shuffle. [[NormalEqAggregator]] carries
+  * the same buffer through a Spark SQL aggregation for
+  * [[CollectiveALSModel.foldIn]], where map-side partial aggregation
+  * shuffles one buffer of k(k+1)/2 + k doubles per (partition, id) —
+  * about k/2 times the bytes of routing k floats per (id, block), which
+  * is acceptable for a fold-in batch but not for a fit.
   */
 case class NormalEq(
     var ata: Array[Double],
@@ -30,14 +34,18 @@ object NormalEq {
     NormalEq(new Array[Double](rank * (rank + 1) / 2), new Array[Double](rank), 0L, 0L)
 
   /** ata += c · f fᵀ (packed upper, column-major). */
-  def addOuter(ata: Array[Double], f: Array[Float], c: Double): Unit = {
+  def addOuter(ata: Array[Double], f: Array[Float], c: Double): Unit =
+    addOuter(ata, f, 0, f.length, c)
+
+  /** ata += c · v vᵀ for v = f[off, off + k). */
+  def addOuter(ata: Array[Double], f: Array[Float], off: Int, k: Int, c: Double): Unit = {
     var j = 0
     var idx = 0
-    while (j < f.length) {
-      val cfj = c * f(j)
+    while (j < k) {
+      val cfj = c * f(off + j)
       var i = 0
       while (i <= j) {
-        ata(idx) += cfj * f(i)
+        ata(idx) += cfj * f(off + i)
         idx += 1
         i += 1
       }
@@ -46,10 +54,14 @@ object NormalEq {
   }
 
   /** atb += c · f. */
-  def axpy(atb: Array[Double], f: Array[Float], c: Double): Unit = {
+  def axpy(atb: Array[Double], f: Array[Float], c: Double): Unit =
+    axpy(atb, f, 0, f.length, c)
+
+  /** atb += c · f[off, off + k). */
+  def axpy(atb: Array[Double], f: Array[Float], off: Int, k: Int, c: Double): Unit = {
     var i = 0
-    while (i < f.length) {
-      atb(i) += c * f(i)
+    while (i < k) {
+      atb(i) += c * f(off + i)
       i += 1
     }
   }
