@@ -1,5 +1,9 @@
 package graft
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.{Dependency, OneToOneDependency, Partition, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -103,4 +107,27 @@ object Tables {
   /** Row count up to which [[broadcastIfSmall]] broadcasts: 5e6 rows is
     * tens of MB for the narrow dim-scale rows it gates. */
   val BroadcastRowLimit = 5000000L
+
+  /** The RDD `build` returns, built only when a job first needs its
+    * partitions: Spark computes every ancestor's partitions on the
+    * submitting thread before it schedules a job. `df.rdd` and
+    * `df.queryExecution.toRdd` plan `df` at once, and under AQE run its
+    * shuffle stages then and there, as does any RDD whose constructor reads
+    * its parents' partitions (`cartesian`, `zipPartitions`); an operator
+    * that builds them in here fires no job while its caller is still
+    * building a frame. */
+  def deferred[T: ClassTag](sc: SparkContext)(build: => RDD[T]): RDD[T] =
+    new Deferred(sc, () => build)
+
+  private final class Deferred[T: ClassTag](sc: SparkContext, @transient build: () => RDD[T])
+      extends RDD[T](sc, Nil) {
+    @transient private lazy val built: RDD[T] = build()
+    override protected def getDependencies: Seq[Dependency[_]] =
+      Seq(new OneToOneDependency(built))
+    override protected def getPartitions: Array[Partition] = built.partitions
+    override protected def getPreferredLocations(split: Partition): Seq[String] =
+      firstParent[T].preferredLocations(split)
+    override def compute(split: Partition, context: TaskContext): Iterator[T] =
+      firstParent[T].iterator(split, context)
+  }
 }

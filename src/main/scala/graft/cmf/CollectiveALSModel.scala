@@ -1,8 +1,9 @@
 package graft.cmf
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{FloatType, IntegerType, LongType, StructField, StructType}
 
 /** Fitted collective-ALS model: one (id, features) factor DataFrame per
   * entity.
@@ -37,20 +38,11 @@ class CollectiveALSModel(
     this
   }
 
-  def factorsFor(entity: String): DataFrame = cols.indexOf(entity) match {
-    case -1 => throw new IllegalArgumentException(s"Unknown entity: $entity")
-    case i  => factors(i)
-  }
+  def factorsFor(entity: String): DataFrame = factors(indexOf(entity))
 
-  /** Factor-table row counts, cached per entity *index* (stable under
-    * column renames): adaptive block sizing reads these on every
-    * `recommendTopK` call, and a count job per serving call would be a
-    * full extra pass over the factor table. */
-  private val countCache = scala.collection.concurrent.TrieMap.empty[Int, Long]
-  private def entityCount(entity: String): Long = {
-    val i = cols.indexOf(entity)
-    require(i >= 0, s"Unknown entity: $entity")
-    countCache.getOrElseUpdate(i, factors(i).count())
+  private def indexOf(entity: String): Int = cols.indexOf(entity) match {
+    case -1 => throw new IllegalArgumentException(s"Unknown entity: $entity")
+    case i  => i
   }
 
   /** Native fused dot ([[graft.functions.ArrayDot]]); registered by
@@ -155,84 +147,76 @@ class CollectiveALSModel(
   }
 
   /** Top-k right-entity recommendations per left-entity id, as rows
-    * (leftEntity, rightEntity, score, rank).
+    * (leftEntity, rightEntity, score, rank): score is the float
+    * [[predict]] would give, ranked by score desc then right id asc — the
+    * rows `row_number()` over that order would keep, computed without a
+    * window or a sort.
     *
-    * Blocked on BOTH sides (MLlib `recommendForAll` shape) — never
-    * materializes the |left|×|right| cross product, and never replicates
-    * individual left *rows* per right block: both factor tables group
-    * into hash blocks (arrays), the cross join runs over block×block
-    * pairs (|leftBlocks|·|rightBlocks| rows — at 1B×1B ids that is ~10⁹
-    * block rows, where one-sided blocking would push 10¹³ replicated
-    * left rows through the shuffle), a per-partition primitive loop
-    * selects each left id's block-local top-k (the dot-product hot loop
-    * is the one place where native array expressions lose an order of
-    * magnitude to scratch arithmetic), and only k·numBlocks candidate
-    * rows per left id survive to the final per-id window.
+    * Both factor tables are read as they are partitioned (the fit writes
+    * one partition per entity block); each right partition is a block,
+    * streamed in chunks of at most [[CollectiveALSModel.RightBlockIds]]
+    * ids. One task per (right partition, left partition) streams the left
+    * partition once per chunk and keeps a k-slot top-k ([[graft.TopKSlots]])
+    * per left id over the chunk; one bounded merge per left id
+    * (`reduceByKey`) then joins the k·(chunks) candidates. Every
+    * |left|×|right| score is computed (exact top-k), but only k rows per
+    * (left id, chunk) ever leave a task, and a task holds one chunk
+    * (RightBlockIds × rank floats) plus k slots. Building the frame runs
+    * no job, whatever the factor tables' plans hold; materializing a
+    * fitted model's is one.
     *
-    * `numBlocks`/`numLeftBlocks` <= 0 (default) size blocks adaptively
-    * to ~100k right / ~10k left ids per block — each block row stays a
-    * few MB regardless of table size (a fixed block count would overflow
-    * Spark's single-record limits at billion-id scale). */
+    * `numBlocks` > 0 spreads the right side over that many blocks and
+    * `numLeftBlocks` > 0 the left side over that many partitions (each a
+    * round-robin shuffle); the rows do not depend on either. */
   def recommendTopK(
       k: Int,
       leftEntity: String,
       rightEntity: String,
       numBlocks: Int = 0,
       numLeftBlocks: Int = 0): DataFrame = {
-    require(k > 0)
-    require(cols.contains(leftEntity), s"Unknown entity: $leftEntity")
+    require(k > 0, "k must be positive")
+    // Unknown entities fail here, not in the first job.
+    Seq(leftEntity, rightEntity).foreach(indexOf)
     val spark = factors.head.sparkSession
-    import spark.implicits._
-    val rn =
-      if (numBlocks > 0) numBlocks
-      else math.min(65536L,
-        math.max(32L, entityCount(rightEntity) / 100000L + 1)).toInt
-    val ln =
-      if (numLeftBlocks > 0) numLeftBlocks
-      else math.min(1048576L,
-        math.max(32L, entityCount(leftEntity) / 10000L + 1)).toInt
-    val userBlocks = factorsFor(leftEntity)
-      .groupBy(pmod(xxhash64(col("id")), lit(ln)).as("ublk"))
-      .agg(collect_list(struct(col("id").as("_1"), col("features").as("_2"))).as("us"))
-      .select("us")
-    val itemBlocks = factorsFor(rightEntity)
-      .groupBy(pmod(xxhash64(col("id")), lit(rn)).as("blk"))
-      .agg(collect_list(struct(col("id").as("_1"), col("features").as("_2"))).as("items"))
-      .select("items")
+    val chunk = CollectiveALSModel.RightBlockIds
     val kk = k
-    val cand = userBlocks.crossJoin(itemBlocks)
-      .as[(Seq[(Long, Array[Float])], Seq[(Long, Array[Float])])]
-      .mapPartitions { it =>
-        it.flatMap { case (us, items) =>
-          us.iterator.flatMap { case (uid, uf) =>
-            // Block-local top-k by (score desc, id asc): insertion into
-            // fixed k-slots — O(|block|·k) comparisons, no allocation.
-            val ids = new Array[Long](kk)
-            val scores = new Array[Double](kk)
-            var filled = 0
-            items.foreach { case (iid, ifeat) =>
-              var s = 0.0
-              var j = 0
-              while (j < uf.length) { s += uf(j) * ifeat(j); j += 1 }
-              var p = filled
-              while (p > 0 && (scores(p - 1) < s ||
-                  (scores(p - 1) == s && ids(p - 1) > iid))) p -= 1
-              if (p < kk) {
-                val last = math.min(filled, kk - 1)
-                var m = last
-                while (m > p) { ids(m) = ids(m - 1); scores(m) = scores(m - 1); m -= 1 }
-                ids(p) = iid
-                scores(p) = s
-                if (filled < kk) filled += 1
-              }
-            }
-            (0 until filled).map(x => (uid, ids(x), scores(x).toFloat))
-          }
-        }
-      }.toDF(leftEntity, rightEntity, "score")
-    val w = Window.partitionBy(leftEntity).orderBy(col("score").desc, col(rightEntity))
-    cand.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    val lists = graft.Tables.deferred(spark.sparkContext) {
+      val right = idRows(rightEntity)
+      val blocks = if (numBlocks > 0) right.coalesce(numBlocks, shuffle = true) else right
+      val chunks = blocks.mapPartitions(_.grouped(chunk).map(c => (c.map(_._1).toArray, c.map(_._2).toArray)))
+      val left = idRows(leftEntity)
+      chunks.cartesian(if (numLeftBlocks > 0) left.coalesce(numLeftBlocks, shuffle = true) else left)
+    }.map { case ((ids, feats), (lid, lf)) =>
+      val top = new graft.TopKSlots(kk)
+      var j = 0
+      while (j < ids.length) {
+        // predict's array_dot: double products summed left to right.
+        val f = feats(j)
+        val n = math.min(lf.length, f.length)
+        var s = 0.0
+        var d = 0
+        while (d < n) { s += lf(d).toDouble * f(d); d += 1 }
+        top.offer(ids(j), s.toFloat.toDouble)
+        j += 1
+      }
+      (lid, top)
+    }
+    val out = lists.reduceByKey((a, b) => a.merge(b), spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      .flatMap { case (lid, top) =>
+        Iterator.tabulate(top.size)(r => Row(lid, top.ids(r), top.scores(r).toFloat, r + 1))
+      }
+    spark.createDataFrame(out, StructType(Seq(
+      StructField(leftEntity, LongType, nullable = false),
+      StructField(rightEntity, LongType, nullable = false),
+      StructField("score", FloatType, nullable = false),
+      StructField("rank", IntegerType, nullable = false))))
   }
+
+  /** `entity`'s (id, features) pairs. Plans the factor table at once:
+    * call it inside [[graft.Tables.deferred]]. */
+  private def idRows(entity: String): RDD[(Long, Array[Float])] =
+    factorsFor(entity).select(col("id").cast("long"), col("features").cast("array<float>"))
+      .queryExecution.toRdd.map(r => (r.getLong(0), r.getArray(1).toFloatArray()))
 
   def recommendTopK(k: Int): DataFrame = recommendTopK(k, cols(0), cols(1))
 
@@ -253,6 +237,10 @@ class CollectiveALSModel(
 }
 
 object CollectiveALSModel {
+
+  /** Right ids per top-k block and per chunk a task holds: 100k ids is
+    * 12.8 MB of factors at rank 32. */
+  private[cmf] val RightBlockIds = 100000
 
   /** Load a model written by [[CollectiveALSModel.save]]. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): CollectiveALSModel = {

@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   * (m·k·subDim doubles — KBs), trained per-subspace with the same
   * Spark ML k-means as [[IvfIndex]]; encoding is one per-partition
   * primitive pass; search broadcasts the query LUTs and runs a
-  * per-partition top-k heap, then a bounded per-query window — the
-  * recommendTopK shape, never |queries|×|corpus| shuffled rows.
+  * per-partition k-slot top-k ([[graft.TopKSlots]]), then a bounded
+  * per-query window — never |queries|×|corpus| shuffled rows.
   */
 object Pq {
 
@@ -300,33 +300,21 @@ object Pq {
       .as[(Long, Array[Int])]
       .mapPartitions { it =>
         val qs = bc.value
-        // Per-partition fixed k-slot top-k per query (recommendTopK's
-        // insertion shape): O(|partition|·|queries|·m) lookups, no sort.
-        val ids = Array.ofDim[Long](qs.length, kk)
-        val scores = Array.ofDim[Double](qs.length, kk)
-        val filled = new Array[Int](qs.length)
+        // Per-partition fixed k-slot top-k per query:
+        // O(|partition|·|queries|·m) lookups, no sort.
+        val tops = Array.fill(qs.length)(new graft.TopKSlots(kk))
         it.foreach { case (id, codes) =>
           var q = 0
           while (q < qs.length) {
             val lut = qs(q)._2
             var s = 0.0; var j = 0
             while (j < lut.length) { s += lut(j)(codes(j)); j += 1 }
-            val fid = ids(q); val fsc = scores(q)
-            var p = filled(q)
-            while (p > 0 && (fsc(p - 1) < s ||
-                (fsc(p - 1) == s && fid(p - 1) > id))) p -= 1
-            if (p < kk) {
-              val last = math.min(filled(q), kk - 1)
-              var x = last
-              while (x > p) { fid(x) = fid(x - 1); fsc(x) = fsc(x - 1); x -= 1 }
-              fid(p) = id; fsc(p) = s
-              if (filled(q) < kk) filled(q) += 1
-            }
+            tops(q).offer(id, s)
             q += 1
           }
         }
         qs.indices.iterator.flatMap { q =>
-          (0 until filled(q)).map(x => (qs(q)._1, ids(q)(x), scores(q)(x)))
+          (0 until tops(q).size).map(x => (qs(q)._1, tops(q).ids(x), tops(q).scores(x)))
         }
       }
       .toDF("query_id", idCol, "score")
@@ -413,9 +401,7 @@ final class IvfPqIndex private[ops] (
       .as[(Long, Array[Int], Int)]
       .mapPartitions { it =>
         val qs = bc.value
-        val ids = Array.ofDim[Long](qs.length, kk)
-        val scores = Array.ofDim[Double](qs.length, kk)
-        val filled = new Array[Int](qs.length)
+        val tops = Array.fill(qs.length)(new graft.TopKSlots(kk))
         it.foreach { case (id, codes, cell) =>
           var q = 0
           while (q < qs.length) {
@@ -424,23 +410,13 @@ final class IvfPqIndex private[ops] (
               var s = qs(q)._4(cell) // ⟨q, c_cell⟩: the residual offset
               var j = 0
               while (j < lut.length) { s += lut(j)(codes(j)); j += 1 }
-              val fid = ids(q); val fsc = scores(q)
-              var p = filled(q)
-              while (p > 0 && (fsc(p - 1) < s ||
-                  (fsc(p - 1) == s && fid(p - 1) > id))) p -= 1
-              if (p < kk) {
-                val last = math.min(filled(q), kk - 1)
-                var x = last
-                while (x > p) { fid(x) = fid(x - 1); fsc(x) = fsc(x - 1); x -= 1 }
-                fid(p) = id; fsc(p) = s
-                if (filled(q) < kk) filled(q) += 1
-              }
+              tops(q).offer(id, s)
             }
             q += 1
           }
         }
         qs.indices.iterator.flatMap { q =>
-          (0 until filled(q)).map(x => (qs(q)._1, ids(q)(x), scores(q)(x)))
+          (0 until tops(q).size).map(x => (qs(q)._1, tops(q).ids(x), tops(q).scores(x)))
         }
       }
       .toDF("query_id", "id", "score")

@@ -294,52 +294,144 @@ class CollectiveALSSpec extends SparkSpec {
     assert(model.predict(ratings).columns.contains("prediction"))
   }
 
+  /** (left, right, score, rank) rows of a top-k frame. */
+  private def topRows(rec: DataFrame, l: String, r: String): Set[(Long, Long, Float, Int)] =
+    rec.select(l, r, "score", "rank").collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getFloat(2), x.getInt(3))).toSet
+
+  /** The definition recommendTopK must meet: `predict` over the full
+    * left × right cross, then `row_number()` over (prediction desc, right
+    * id), cut at k. */
+  private def bruteTopK(model: CollectiveALSModel, l: String, r: String, k: Int): Set[(Long, Long, Float, Int)] = {
+    val ls = model.factorsFor(l).select(col("id").as(l))
+    val rs = model.factorsFor(r).select(col("id").as(r))
+    val ranked = model.predict(ls.crossJoin(rs), l, r)
+      .withColumn("rank", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(l).orderBy(col("prediction").desc, col(r))))
+      .filter(col("rank") <= k)
+      .withColumnRenamed("prediction", "score")
+    topRows(ranked, l, r)
+  }
+
+  private lazy val userItemModel = new CollectiveALS()
+    .setRank(4).setMaxIter(5).setRegParam(0.01).setSeed(7L)
+    .fit(ratings)
+
+  /** A 3-entity fit: (user, item) ratings plus planted (item, tag) ratings
+    * over 10 tags. */
+  private lazy val userItemTagModel = {
+    val tags = (for {
+      i <- 0 until nItems
+      t <- 0 until 10
+      if CollectiveALS.splitmix64(i * 31L + t) % 3 == 0
+    } yield {
+      val fi = PlantedFactors.signedFactor(2L, i, trueRank)
+      val ft = PlantedFactors.signedFactor(3L, t, trueRank)
+      (i.toLong, t.toLong, fi.zip(ft).map { case (a, b) => a * b }.sum * 5.0f)
+    }).toDF("item", "tag", "rating")
+    new CollectiveALS("user", "item", "tag")
+      .setRank(4).setMaxIter(5).setRegParam(0.05).setSeed(7L).setNumBlocks(2)
+      .fit(("user", "item") -> ratings, ("item", "tag") -> tags)
+  }
+
   test("recommendTopK returns k deterministic, correctly ranked items") {
-    val model = new CollectiveALS()
-      .setRank(4).setMaxIter(5).setRegParam(0.01).setSeed(7L)
-      .fit(ratings)
-    val rec = model.recommendTopK(3)
+    val rec = userItemModel.recommendTopK(3)
     val counts = rec.groupBy("user").count().select("count").distinct().collect()
     assert(counts.map(_.getLong(0)).toSeq == Seq(3L))
-    // Scores non-increasing within each user.
-    val bad = rec.selectExpr("user", "rank", "score")
-      .withColumn("prev", lag("score", 1).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("user").orderBy("rank")))
-      .filter(col("prev").isNotNull && col("score") > col("prev"))
-      .count()
-    assert(bad == 0)
-    // Full-k equality: blocked path == brute-force (predict on the full
-    // cross, windowed top-k) for every user — (user, item, rank) triples.
-    val users = model.factorsFor("user").select(col("id").as("user"))
-    val items = model.factorsFor("item").select(col("id").as("item"))
-    val brute = model.predict(users.crossJoin(items), "user", "item")
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("user")
-          .orderBy(col("prediction").desc, col("item"))))
-      .filter(col("rn") <= 3).select("user", "item", "rn")
-      .collect().map(r => (r.getLong(0), r.getInt(2)) -> r.getLong(1)).toMap
-    val blocked = rec.select("user", "item", "rank")
-      .collect().map(r => (r.getLong(0), r.getInt(2)) -> r.getLong(1)).toMap
-    assert(blocked == brute,
-      s"${(brute.toSet -- blocked.toSet).take(3)} vs ${(blocked.toSet -- brute.toSet).take(3)}")
+    val got = topRows(rec, "user", "item")
+    val want = bruteTopK(userItemModel, "user", "item", 3)
+    assert(got == want, s"${(want -- got).take(3)} vs ${(got -- want).take(3)}")
+  }
+
+  test("recommendTopK on a 3-entity model's non-default pair equals predict and window") {
+    val got = topRows(userItemTagModel.recommendTopK(3, "item", "tag"), "item", "tag")
+    val want = bruteTopK(userItemTagModel, "item", "tag", 3)
+    assert(got.size == nItems * 3)
+    assert(got == want, s"${(want -- got).take(3)} vs ${(got -- want).take(3)}")
+  }
+
+  test("recommendTopK with k above the right side's size ranks every right id 1..n") {
+    val k = nItems + 7
+    val got = topRows(userItemModel.recommendTopK(k), "user", "item")
+    assert(got.groupBy(_._1).values.forall { rs =>
+      rs.map(_._4).toSeq.sorted == (1 to nItems) && rs.map(_._2).size == nItems
+    })
+    assert(got == bruteTopK(userItemModel, "user", "item", k))
+  }
+
+  test("recommendTopK ranks equal float scores by right id ascending") {
+    // Items in three groups of identical factors, ids scrambled across
+    // groups: every user's scores tie within a group.
+    val itemIds = Seq(17L, 3L, 11L, 5L, 8L, 2L, 13L, 1L, 9L)
+    val groups = Seq(Array(1.0f, 0.5f), Array(0.25f, 2.0f), Array(-1.0f, 1.0f))
+    val items = itemIds.zipWithIndex.map { case (id, j) => (id, groups(j % 3)) }.toDF("id", "features")
+    val users = Seq((1L, Array(1.0f, 1.0f)), (2L, Array(2.0f, -1.0f)), (3L, Array(0.0f, 0.0f)))
+      .toDF("id", "features")
+    val want = (for {
+      (u, uf) <- Seq((1L, Array(1.0f, 1.0f)), (2L, Array(2.0f, -1.0f)), (3L, Array(0.0f, 0.0f)))
+      ranked = itemIds.zipWithIndex
+        .map { case (id, j) => (id, (uf(0).toDouble * groups(j % 3)(0) + uf(1).toDouble * groups(j % 3)(1)).toFloat) }
+        .sortBy { case (id, s) => (-s, id) }
+      ((id, s), r) <- ranked.take(5).zipWithIndex
+    } yield (u, id, s, r + 1)).toSet
+    val built = new CollectiveALSModel(2, Seq(users, items), Seq("user", "item"))
+    assert(topRows(built.recommendTopK(5), "user", "item") == want)
+    assert(topRows(built.recommendTopK(5, "user", "item", numBlocks = 4, numLeftBlocks = 2),
+      "user", "item") == want)
   }
 
   test("recommendTopK is invariant to block geometry") {
-    // The two-sided block decomposition is an execution detail: any
-    // (leftBlocks, rightBlocks) split must produce identical rows.
-    val model = new CollectiveALS()
-      .setRank(4).setMaxIter(5).setRegParam(0.01).setSeed(7L)
-      .fit(ratings)
-    def rows(rec: DataFrame): Set[(Long, Long, Float, Int)] =
-      rec.select("user", "item", "score", "rank")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getFloat(2), r.getInt(3))).toSet
-    val base = rows(model.recommendTopK(4))
-    val skewed = rows(model.recommendTopK(4, "user", "item",
-      numBlocks = 7, numLeftBlocks = 3))
-    val singleton = rows(model.recommendTopK(4, "user", "item",
-      numBlocks = 1, numLeftBlocks = 1))
+    // Blocks are an execution detail: any (leftBlocks, rightBlocks) split
+    // must produce identical rows.
+    val model = userItemModel
+    val base = topRows(model.recommendTopK(4), "user", "item")
+    val skewed = topRows(model.recommendTopK(4, "user", "item",
+      numBlocks = 7, numLeftBlocks = 3), "user", "item")
+    val singleton = topRows(model.recommendTopK(4, "user", "item",
+      numBlocks = 1, numLeftBlocks = 1), "user", "item")
     assert(skewed == base)
     assert(singleton == base)
+  }
+
+  test("a saved and loaded model recommends the same rows") {
+    val model = userItemTagModel
+    val dir = java.nio.file.Files.createTempDirectory("graft_topk").toString
+    model.save(dir)
+    val loaded = CollectiveALSModel.load(spark, dir)
+    assert(topRows(loaded.recommendTopK(4), "user", "item") ==
+      topRows(model.recommendTopK(4), "user", "item"))
+    assert(topRows(loaded.recommendTopK(2, "item", "tag"), "item", "tag") ==
+      topRows(model.recommendTopK(2, "item", "tag"), "item", "tag"))
+  }
+
+  test("recommendTopK on a fitted model builds without a job and runs in at most two") {
+    // Guards against count jobs at build time and a grouping shuffle or
+    // window at run time coming back.
+    import org.apache.spark.graftshim.JobCount
+    val model = userItemTagModel
+    for ((l, r) <- Seq(("user", "item"), ("item", "tag"))) {
+      val (rec, built) = JobCount(spark.sparkContext)(model.recommendTopK(5, l, r))
+      val (rows, ran) = JobCount(spark.sparkContext)(rec.collect())
+      assert(built == 0, s"$l -> $r: $built jobs while building")
+      assert(ran <= 2, s"$l -> $r: $ran jobs to materialize")
+      assert(rows.nonEmpty)
+    }
+  }
+
+  test("recommendTopK over factor tables that hold a shuffle builds without a job") {
+    // The right and left factor frames are aggregates: planning either
+    // under AQE runs its shuffle stage, which must wait for the caller's
+    // job.
+    import org.apache.spark.graftshim.JobCount
+    val model = userItemTagModel
+    def aggregated(e: String) = model.factorsFor(e).groupBy("id").agg(first("features").as("features"))
+    val shuffled = new CollectiveALSModel(model.rank, Seq("user", "item", "tag").map(aggregated),
+      Seq("user", "item", "tag"))
+    for ((l, r) <- Seq(("user", "item"), ("item", "tag"))) {
+      val (rec, built) = JobCount(spark.sparkContext)(shuffled.recommendTopK(5, l, r))
+      assert(built == 0, s"$l -> $r: $built jobs while building")
+      assert(topRows(rec, l, r) == topRows(model.recommendTopK(5, l, r), l, r))
+    }
   }
 
   /** Dense ridge solve (AᵀA + λI)x = Aᵀb by Gaussian elimination — the
