@@ -18,8 +18,8 @@ import org.apache.spark.sql.SparkSession
   * exceeds [[Bench.replicateOverSec]], every documented jitter-family
   * entry, every `stream_*` drain, and every `_mat_*` materialization gets
   * a SECOND sample and publishes MIN(run1, run2). The second pass runs on
-  * `spark.newSession()` — all query-layer memo caches key on
-  * `(SparkSession, dir)`, so a fresh session is an epoch bump that makes
+  * `spark.newSession()` — query-layer results are memoized per session
+  * ([[graft.queries.Memo]]), so a fresh session is a cold epoch that makes
   * the rerun re-execute the full plan (fit, index build, stream drain)
   * instead of reading a cache. This is what lets the memoized iterative
   * family (als_*, cmf_*, fit_quality, ann_index_lifecycle) publish a real
@@ -138,8 +138,8 @@ object Bench {
     def replicated(n: String): Boolean =
       jitterFamily(n) || n.startsWith("stream_") || heavy(n)
 
-    // Epoch bump: a fresh session makes every (session, dir)-keyed memo
-    // cold, so the second pass re-executes full plans (stream_checkpoint
+    // Epoch bump: a fresh session starts every `queries.Memo` entry cold,
+    // so the second pass re-executes full plans (stream_checkpoint
     // included — its round-14 hard-coded exclusion existed only because
     // an in-SESSION rerun read its memo in ~20 ms).
     val spark2 = spark.newSession()

@@ -5,6 +5,7 @@ import scala.reflect.ClassTag
 import org.apache.spark.{Dependency, OneToOneDependency, Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -107,6 +108,12 @@ object Tables {
   /** Row count up to which [[broadcastIfSmall]] broadcasts: 5e6 rows is
     * tens of MB for the narrow dim-scale rows it gates. */
   val BroadcastRowLimit = 5000000L
+
+  /** The checkpoint RDDs `df` reads: the RDD under each `LogicalRDD` of its
+    * logical plan. `localCheckpoint` persists that RDD, and
+    * `Dataset.unpersist` does not drop it: release it through the RDD. */
+  def checkpoints(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
 
   /** The RDD `build` returns, built only when a job first needs its
     * partitions: Spark computes every ancestor's partitions on the

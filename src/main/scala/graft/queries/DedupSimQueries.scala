@@ -22,8 +22,7 @@ object DedupSimQueries {
       expr("substring(text, 1, greatest(length(text) - 40, 1))").as("text")))
   }
 
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val pairsCache = Memo.frames
 
   /** Exact n-gram Jaccard pairs over the planted-mutation corpus,
     * materialized once per (session, dir): the pair list and its
@@ -35,7 +34,7 @@ object DedupSimQueries {
     * pair blowup at web scale — is exercised by the correctness gate,
     * not just by specs; the same HAVING filter appears in both oracles. */
   def ngramPairs(s: SparkSession, dir: String): DataFrame =
-    pairsCache.getOrElseUpdate((s, dir),
+    pairsCache(s, dir)(
       Dedup.ngramJaccard(withMutations(s, dir), "text", "doc_id", n = 3, minJaccard = 0.6,
         maxShingleDf = 10)
         .localCheckpoint(true))
@@ -529,22 +528,20 @@ object DedupSimQueries {
   // (brute-force top-5 for the 1-in-50 query set) is IDENTICAL for the
   // three ANN containment audits (LSH, IVF-PQ, PQ) — computed and
   // checkpointed once per (session, dir) instead of once per audit
-  // (§5 serve-many; same single-run-session assumption as pqCache).
-  private val mutTruthCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  // (§5 serve-many).
+  private val mutTruthCache = Memo.frames
 
   private def mutTruthTop5(s: SparkSession, dir: String): DataFrame =
-    mutTruthCache.getOrElseUpdate((s, dir), {
+    mutTruthCache(s, dir) {
       val e = withVecMutations(s, dir)
       Similarity.bruteForceTopK(
           e.filter(pmod(col("vec_id"), lit(50)) === 0),
           e, "vec_id", "embedding", 5)
         .filter(col("cosine") >= 0.9)
         .localCheckpoint(true)
-    })
+    }
 
-  private val bandedPairsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Double), DataFrame]
+  private val bandedPairsCache = Memo.frames
 
   /** Cosine pair source for the similarity-graph operators —
     * [[graft.ops.Dedup.embeddingCosineLsh]] at (planes=256, bands=64),
@@ -564,14 +561,9 @@ object DedupSimQueries {
     * exact baseline while pruning the scored space ~p₂⁴·bands ≈ 4×.
     * Memoized + checkpointed per (session, dir, threshold): triangles,
     * pagerank and BFS all share the 0.4 edge list; harmonic and local
-    * clustering share 0.35. Single-run assumption (same as labelsCache
-    * / pqCache): entries are never evicted and a dir whose contents
-    * change between calls would serve stale pairs — sessions here are
-    * per-run (Verify/Bench/specs each build a fresh session), so the
-    * memo's lifetime equals the run's. Long-lived multi-corpus
-    * sessions would need eviction before reusing this cache. */
+    * clustering share 0.35. */
   def bandedCosinePairs(s: SparkSession, dir: String, th: Double): DataFrame =
-    bandedPairsCache.getOrElseUpdate((s, dir, th), {
+    bandedPairsCache(s, (dir, th)) {
       // The banding candidates are threshold-independent, so one LSH +
       // verify pass at the lowest declared threshold serves every caller
       // at or above it; each threshold is an exact filter on the
@@ -587,26 +579,24 @@ object DedupSimQueries {
         .select(col("vec_id_a"), col("vec_id_b"),
           round(col("cosine"), 6).as("cosine"))
         .localCheckpoint(true)
-    })
+    }
 
   private val bandedBaseThreshold = 0.35
-  private val bandedBaseCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val bandedBaseCache = Memo.frames
   private def bandedBase(s: SparkSession, dir: String): DataFrame =
-    bandedBaseCache.getOrElseUpdate((s, dir),
+    bandedBaseCache(s, dir)(
       Dedup.embeddingCosineLshRaw(Tables.embeddings(s, dir), "embedding",
           "vec_id", bandedBaseThreshold, planes = 256, bands = 64)
         .localCheckpoint(true))
 
-  private val labelsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val labelsCache = Memo.frames
 
   /** Near-dup component labels over [[ngramPairs]], run once per
     * (session, dir): the iterative propagation's output is already
     * checkpoint-backed, so the memo alone stops `dedup_clusters` and
     * `split_leakfree` from each paying the propagation loop. */
   def clusterLabels(s: SparkSession, dir: String): DataFrame =
-    labelsCache.getOrElseUpdate((s, dir),
+    labelsCache(s, dir)(
       Dedup.clusters(ngramPairs(s, dir), "doc_id_a", "doc_id_b"))
 
   /** #19b near-dup connected components over the exact n-gram Jaccard
@@ -666,34 +656,31 @@ object DedupSimQueries {
     * unpartitioned lag/lead window. Memoized per (session, dir): the
     * rank pipeline runs driver actions at construction, and four
     * queries consume the same planted corpus. */
-  private val paraCorpusCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val paraCorpusCache = Memo.frames
 
   def withParagraphCorpus(s: SparkSession, dir: String): DataFrame =
-    paraCorpusCache.getOrElseUpdate((s, dir), buildParagraphCorpus(s, dir))
-
-  private def buildParagraphCorpus(s: SparkSession, dir: String): DataFrame = {
-    val rk = graft.ops.ChronoSplit.RankCol
-    val ranked = graft.ops.ChronoSplit
-      .withGlobalRank(Tables.documents(s, dir).select("doc_id", "text"),
-        "doc_id", "doc_id")
-      .localCheckpoint(true)
-    val prev = ranked.select((col(rk) + 1).as(rk), col("text").as("lag_text"))
-    val next = ranked.select((col(rk) - 1).as(rk), col("text").as("lead_text"))
-    val joined = ranked.join(prev, Seq(rk), "left").join(next, Seq(rk), "left")
-      .select(col("doc_id"),
-        concat_ws("\n\n", col("lag_text"), col("text"), col("lead_text")).as("text"))
-    // Every consumer of this corpus (per-position md5 k-gram scans,
-    // paragraph splits) is CPU-heavy per row while the corpus itself is
-    // a single parquet split — fan the rows out so the narrow scans run
-    // cluster-wide instead of on one core (gated on the documents scan's
-    // width: a wide at-scale corpus is already fanned out by the rank
-    // joins and must not be capped to the core count), and materialize
-    // ONCE so the four span/paragraph consumers read the fanned-out
-    // corpus instead of re-deriving (and re-shuffling) it.
-    Tables.fanOut(joined, Tables.documents(s, dir))
-      .localCheckpoint(true)
-  }
+    paraCorpusCache(s, dir) {
+      val rk = graft.ops.ChronoSplit.RankCol
+      val ranked = graft.ops.ChronoSplit
+        .withGlobalRank(Tables.documents(s, dir).select("doc_id", "text"),
+          "doc_id", "doc_id")
+        .localCheckpoint(true)
+      val prev = ranked.select((col(rk) + 1).as(rk), col("text").as("lag_text"))
+      val next = ranked.select((col(rk) - 1).as(rk), col("text").as("lead_text"))
+      val joined = ranked.join(prev, Seq(rk), "left").join(next, Seq(rk), "left")
+        .select(col("doc_id"),
+          concat_ws("\n\n", col("lag_text"), col("text"), col("lead_text")).as("text"))
+      // Every consumer of this corpus (per-position md5 k-gram scans,
+      // paragraph splits) is CPU-heavy per row while the corpus itself is
+      // a single parquet split — fan the rows out so the narrow scans run
+      // cluster-wide instead of on one core (gated on the documents scan's
+      // width: a wide at-scale corpus is already fanned out by the rank
+      // joins and must not be capped to the core count), and materialize
+      // ONCE so the four span/paragraph consumers read the fanned-out
+      // corpus instead of re-deriving (and re-shuffling) it.
+      Tables.fanOut(joined, Tables.documents(s, dir))
+        .localCheckpoint(true)
+    }
 
   /** #19e paragraph-level exact dedup: first corpus-wide occurrence of
     * every distinct paragraph survives, documents reassemble around the
@@ -714,15 +701,14 @@ object DedupSimQueries {
       minShared = 3, maxGramDf = 1000)
       .orderBy("doc_id_a", "doc_id_b")
 
-  private val spanGramsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val spanGramsCache = Memo.frames
 
   /** The span family's content-defined k-gram sample (k=40, md5 prefix
     * "0") over the planted paragraph corpus, materialized once per
     * (session, dir): the per-window md5 scan is the dominant cost of all
     * three span queries, and without the memo each recomputed it. */
   def spanGrams(s: SparkSession, dir: String): DataFrame =
-    spanGramsCache.getOrElseUpdate((s, dir),
+    spanGramsCache(s, dir)(
       Dedup.spanGramPositions(withParagraphCorpus(s, dir), "text", "doc_id",
           k = 40, selPrefix = "0")
         .localCheckpoint(true))
@@ -769,11 +755,10 @@ object DedupSimQueries {
   // (timed as `_mat_ivf_index` in the bench). Same build parameters as
   // the previous per-query ivfTopK calls, so search outputs are
   // unchanged.
-  private val ivfIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.ops.IvfIndex]
+  private val ivfIdxCache = Memo[graft.ops.IvfIndex](i => Seq(i.assigned))
 
   private[graft] def embIvfIndex(s: SparkSession, dir: String): graft.ops.IvfIndex =
-    ivfIdxCache.getOrElseUpdate((s, dir),
+    ivfIdxCache(s, dir)(
       graft.ops.IvfIndex.build(Tables.embeddings(s, dir), "vec_id", "embedding",
         nlist = 32, seed = 7L))
 
@@ -793,12 +778,7 @@ object DedupSimQueries {
         |                          (a, e) -> a + e * e)))""".stripMargin)
       .as("uv"))
 
-  // Single-run-session assumption (same as bandedPairsCache): entries
-  // are never evicted; a dir whose contents change mid-session would go
-  // stale. Bench/Verify use one session per run (a fresh `newSession()`
-  // is the bench's epoch bump), so the memo's lifetime equals the run's.
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (graft.ops.Pq.PqModel, DataFrame)]
+  private val pqCache = Memo[(graft.ops.Pq.PqModel, DataFrame)](p => Seq(p._2))
 
   /** Build-once PQ state per (session, dir) over the planted-mutation
     * corpus: codebooks + the encoded corpus, shared by the search
@@ -806,22 +786,21 @@ object DedupSimQueries {
     * its own 8 k-means fits would double the bench cost and contradict
     * the build-once-search-many serving shape). */
   def pqState(s: SparkSession, dir: String): (graft.ops.Pq.PqModel, DataFrame) =
-    pqCache.getOrElseUpdate((s, dir), {
+    pqCache(s, dir) {
       val unit = unitMutations(s, dir)
       // padShort: a degenerate corpus (fewer distinct subvectors than
       // k) pads the codebook instead of failing the whole query surface.
       val model = graft.ops.Pq.train(unit, "vec_id", "uv", m = 8, k = 16,
         seed = 7L, padShort = true)
       (model, graft.ops.Pq.encode(unit, "vec_id", "uv", model).localCheckpoint(true))
-    })
+    }
 
-  private val ivfPqCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.ops.IvfPqIndex]
+  private val ivfPqCache = Memo[graft.ops.IvfPqIndex](i => Seq(i.codedCells))
 
   /** Build-once IVF-PQ index per (session, dir), over the
     * planted-mutation corpus (the audit needs known high-cosine pairs). */
   def ivfPqIndex(s: SparkSession, dir: String): graft.ops.IvfPqIndex =
-    ivfPqCache.getOrElseUpdate((s, dir),
+    ivfPqCache(s, dir)(
       graft.ops.Pq.buildIvfPq(withVecMutations(s, dir), "vec_id", "embedding",
         nlist = 16, m = 8, k = 16, seed = 7L))
 
@@ -879,11 +858,7 @@ object DedupSimQueries {
         max(array_max(col("codes"))) <= 15).as("codes_in_range"))
   }
 
-  // Single-run-session assumption (see bandedPairsCache): never evicted,
-  // stale if dir contents change mid-session; safe under the one-session-
-  // per-run convention used by Bench/Verify/tests.
-  private val lifecycleCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val lifecycleCache = Memo.frames
 
   /** #24e ANN index lifecycle, driver-hash-checked end to end: build the
     * IVF index on two thirds of the corpus, [[graft.ops.IvfIndex.add]]
@@ -893,7 +868,7 @@ object DedupSimQueries {
     * incremental add left a true partition behind and the round trip
     * lost nothing. Memoized + scratch-cleaned. */
   def annIndexLifecycle(s: SparkSession, dir: String): DataFrame =
-    lifecycleCache.getOrElseUpdate((s, dir), Scratch.cleaned("graft_ivf") { tmp =>
+    lifecycleCache(s, dir)(Scratch.cleaned("graft_ivf") { tmp =>
       val e = Tables.embeddings(s, dir)
       val idx = graft.ops.IvfIndex
         .build(e.filter(pmod(col("vec_id"), lit(3)) =!= 0), "vec_id", "embedding",
@@ -940,13 +915,12 @@ object DedupSimQueries {
     * The oracle unrolls the identical iteration in SQL — seeds, distance
     * formula, FP accumulation order, argmin ties, and the 6-dp centroid
     * rounding all match by construction. */
-  private val kmeansCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.ops.KMeans.Centroids]
+  private val kmeansCache = Memo[graft.ops.KMeans.Centroids](_ => Nil)
 
   /** The fitted k=4 / 2-round centroid table, memoized per (session,
     * dir): assignment and silhouette are two consumers of one fit. */
   private def kmeansCents(s: SparkSession, dir: String): graft.ops.KMeans.Centroids =
-    kmeansCache.getOrElseUpdate((s, dir),
+    kmeansCache(s, dir)(
       graft.ops.KMeans.fit(Tables.embeddings(s, dir), "vec_id", "embedding",
         k = 4, iters = 2))
 

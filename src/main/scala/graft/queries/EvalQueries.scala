@@ -12,16 +12,14 @@ import org.apache.spark.sql.functions._
   */
 object EvalQueries {
 
-  private val interactionsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val interactionsCache = Memo.frames
 
   /** (custkey, partkey, spend, qty) interaction table. Materialized once
     * PER (session, dir) — previously each calling query re-executed the
     * join+agg and cut a fresh checkpoint; three ranking metrics consume
-    * the same table (single-run-session memo, same convention as the
-    * CmfQueries/DedupSimQueries caches). */
+    * the same table. */
   private def interactions(s: SparkSession, dir: String): DataFrame =
-    interactionsCache.getOrElseUpdate((s, dir),
+    interactionsCache(s, dir)(
       Tables.lineitem(s, dir)
         .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_custkey").as("u"), col("l_partkey").as("i"))
@@ -192,14 +190,13 @@ object EvalQueries {
     * as [[evalBrier]], but keeping the rate as the exact integer pair
     * (s_u, n_u) so the float probability is one correctly-rounded
     * division on both engines. */
-  private val purchaseScoredCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val purchaseScoredCache = Memo.frames
 
   private def purchaseScored(s: SparkSession, dir: String): DataFrame =
     // Memoized + checkpointed per (session, dir): SIX ranking/calibration
     // metrics score this predictor; previously each re-ran the chrono
     // split + train aggregation + scoring join.
-    purchaseScoredCache.getOrElseUpdate((s, dir), {
+    purchaseScoredCache(s, dir) {
       val sided = timeSided(s, dir)
         .withColumn("y",
           when(col("event_type") === "purchase", 1L).otherwise(0L))
@@ -215,7 +212,7 @@ object EvalQueries {
         .withColumn("p_base", col("s_g") / col("n_g"))
         .select("event_id", "y", "p", "neg_p", "p_base")
         .localCheckpoint(true)
-    })
+    }
 
   /** #16d average precision (PR-AUC) of the chrono-split purchase
     * predictor: rank the test half by predicted probability (ties

@@ -1171,15 +1171,14 @@ object OpsQueries {
       .orderBy("doc_id")
   }
 
-  private val coocCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val coocCache = Memo.frames
 
   /** The part co-purchase pair list, materialized once per (session,
     * dir): the neighbor table itself, the recommendation-quality audit,
     * and the graph assortativity screen are three consumers of one
     * pair computation (`_mat_cooc_pairs` times the build in Bench). */
   def coocPairs(s: SparkSession, dir: String): DataFrame =
-    coocCache.getOrElseUpdate((s, dir),
+    coocCache(s, dir)(
       graft.ops.Cooccur.pairs(Tables.lineitem(s, dir), "l_orderkey", "l_partkey",
           minCount = 2L)
         .localCheckpoint(true))
@@ -1846,8 +1845,7 @@ object OpsQueries {
       .agg((count("a_id") + 1).as(outCol))
   }
 
-  private val searchListCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
+  private val searchListCache = Memo.frames
 
   /** Memoized rank-10 retrieval lists for the pinned three-term query
     * ("vector", "key", "dup") shared by the rank-fusion / rank-metric
@@ -1862,14 +1860,14 @@ object OpsQueries {
       s: SparkSession, dir: String, kind: String): DataFrame = {
     // Fail a typo loudly instead of silently serving the tfidf ranking.
     require(kind == "bm25" || kind == "tfidf", s"unknown ranking kind: $kind")
-    searchListCache.getOrElseUpdate((s, dir, kind), {
+    searchListCache(s, (dir, kind)) {
       val docs = Tables.documents(s, dir)
       val q = Seq("vector", "key", "dup")
       val base =
         if (kind == "bm25") TextAnalysis.bm25Search(docs, "text", "doc_id", q, 10)
         else TextAnalysis.tfidfSearch(docs, "text", "doc_id", q, 10)
       rankTopList(base, "rk").localCheckpoint(true)
-    })
+    }
   }
 
   def searchRrf(s: SparkSession, dir: String): DataFrame = {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
   * (small) result is materialized eagerly so nothing references the
   * files afterwards, and the dir is deleted — repeated bench/validate
   * runs in one process must not leak disk. Callers memoize the returned
-  * checkpointed frame per (session, dir).
+  * checkpointed frame through [[Memo]].
   */
 private[queries] object Scratch {
 

@@ -20,24 +20,20 @@ object SourceQueries {
   private def meta(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir).select("doc_id", "lang", "source", "n_chars")
 
-  private val csvCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val jsonlCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val orcCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val csvCache = Memo.frames
+  private val jsonlCache = Memo.frames
+  private val orcCache = Memo.frames
 
   /** #17c typed ORC: write → `TypedOrc.read[DocMeta]` → original rows
     * (name-matched columns; same memo + scratch hygiene as CSV). */
   def orcRoundtrip(s: SparkSession, dir: String): DataFrame =
-    orcCache.getOrElseUpdate((s, dir), Scratch.cleaned("graft_orc") { tmp =>
+    orcCache(s, dir)(Scratch.cleaned("graft_orc") { tmp =>
       meta(s, dir).coalesce(1)
         .write.mode("overwrite").orc(tmp.toString)
       TypedOrc.read[DocMeta](s, tmp.toString).toDF().orderBy("doc_id")
     })
 
-  private val evoCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val evoCache = Memo.frames
 
   /** #17d schema evolution across snapshot generations: an old
     * snapshot (even ids, three columns) and a new one (odd ids, plus a
@@ -45,7 +41,7 @@ object SourceQueries {
     * reality where the schema grew mid-corpus; old rows surface the
     * new column as null, nothing is silently dropped or reordered. */
   def schemaEvolution(s: SparkSession, dir: String): DataFrame =
-    evoCache.getOrElseUpdate((s, dir), Scratch.cleaned("graft_evo") { tmp =>
+    evoCache(s, dir)(Scratch.cleaned("graft_evo") { tmp =>
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
       docs.filter(col("doc_id") % 2 === 0)
         .write.mode("overwrite").parquet(tmp.resolve("gen1").toString)
@@ -58,8 +54,7 @@ object SourceQueries {
         .orderBy("doc_id")
     })
 
-  private val bucketCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val bucketCache = Memo.frames
 
   /** #17e bucketed co-located join ([[graft.sources.Bucketed]]): orders
     * and lineitem bucketed (and per-bucket sorted) by order key into the
@@ -69,7 +64,7 @@ object SourceQueries {
     * The result is the priority revenue rollup, hash-checked against
     * the plain parquet join. */
   def bucketedJoin(s: SparkSession, dir: String): DataFrame =
-    bucketCache.getOrElseUpdate((s, dir), {
+    bucketCache(s, dir) {
       val out = Scratch.cleaned("graft_bkt") { tmp =>
         graft.sources.Bucketed.write(Tables.orders(s, dir)
             .select("o_orderkey", "o_orderpriority"),
@@ -93,10 +88,9 @@ object SourceQueries {
       s.sql("DROP TABLE IF EXISTS graft_bq_orders")
       s.sql("DROP TABLE IF EXISTS graft_bq_lineitem")
       out
-    })
+    }
 
-  private val partCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val partCache = Memo.frames
 
   /** #17f partition-pruned scan: events written `partitionBy(day)`, read
     * back with a literal 7-day filter — the layout that turns a
@@ -105,7 +99,7 @@ object SourceQueries {
     * and that no data filter remains). Daily rollup of the pruned week,
     * hash-checked against the same filter over the unpartitioned table. */
   def partitionedScan(s: SparkSession, dir: String): DataFrame =
-    partCache.getOrElseUpdate((s, dir), Scratch.cleaned("graft_part") { tmp =>
+    partCache(s, dir)(Scratch.cleaned("graft_part") { tmp =>
       val ev = Tables.events(s, dir).withColumn("day", to_date(col("ts")))
       ev.write.mode("overwrite").partitionBy("day").parquet(tmp.toString)
       val back = s.read.parquet(tmp.toString)
@@ -125,7 +119,7 @@ object SourceQueries {
     * Memoized + scratch-cleaned: one write/read per (session, dir), no
     * leaked temp dirs across bench/validate re-runs. */
   def csvRoundtrip(s: SparkSession, dir: String): DataFrame =
-    csvCache.getOrElseUpdate((s, dir), Scratch.cleaned("graft_csv") { tmp =>
+    csvCache(s, dir)(Scratch.cleaned("graft_csv") { tmp =>
       meta(s, dir).coalesce(1)
         .write.mode("overwrite").option("header", "true").csv(tmp.toString)
       TypedCsv.read[DocMeta](s, tmp.toString).toDF().orderBy("doc_id")
@@ -137,7 +131,7 @@ object SourceQueries {
     * the data; the good side must round-trip exactly. The quarantine
     * count rides along as a constant column so the oracle checks it. */
   def jsonlRoundtrip(s: SparkSession, dir: String): DataFrame =
-    jsonlCache.getOrElseUpdate((s, dir), Scratch.cleaned("graft_jsonl") { tmp =>
+    jsonlCache(s, dir)(Scratch.cleaned("graft_jsonl") { tmp =>
       meta(s, dir).coalesce(1)
         .write.mode("overwrite").json(tmp.toString)
       java.nio.file.Files.writeString(tmp.resolve("part-planted-bad.json"),
@@ -148,8 +142,7 @@ object SourceQueries {
         .orderBy("doc_id")
     })
 
-  private val textCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val textCache = Memo.frames
 
   /** #17g line-text roundtrip: documents serialized as
     * `doc_id<TAB>newline-collapsed-text` lines through
@@ -157,7 +150,7 @@ object SourceQueries {
     * the FIRST tab (document text may contain tabs), and length-checked
     * per document against the original table. */
   def textRoundtrip(s: SparkSession, dir: String): DataFrame =
-    textCache.getOrElseUpdate((s, dir), Scratch.cleaned("graft_text") { tmp =>
+    textCache(s, dir)(Scratch.cleaned("graft_text") { tmp =>
       val lines = Tables.documents(s, dir)
         .select(concat(col("doc_id").cast("string"), lit("\t"),
           regexp_replace(col("text"), "\n", " ")).as("line"))
@@ -169,8 +162,7 @@ object SourceQueries {
         .orderBy("doc_id")
     })
 
-  private val fwCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val fwCache = Memo.frames
 
   /** #17h fixed-width (copybook-style) ingestion roundtrip
     * ([[graft.sources.FixedWidth]]): events written as 44-char
@@ -179,7 +171,7 @@ object SourceQueries {
     * per-line substring slices; values survive exactly, so the oracle
     * is the source table itself. */
   def fixedwidthRoundtrip(s: SparkSession, dir: String): DataFrame =
-    fwCache.getOrElseUpdate((s, dir), Scratch.cleaned("graft_fw") { tmp =>
+    fwCache(s, dir)(Scratch.cleaned("graft_fw") { tmp =>
       import graft.sources.FixedWidth
       val layout = Seq(
         FixedWidth.Field("event_id", 12, "long"),
@@ -192,8 +184,7 @@ object SourceQueries {
       FixedWidth.read(s, tmp.toString, layout).orderBy("event_id")
     })
 
-  private val gzCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val gzCache = Memo.frames
 
   /** #17i gzip-compressed text ingestion roundtrip: the same tab-keyed
     * line corpus as [[textRoundtrip]] but written through the gzip
@@ -203,7 +194,7 @@ object SourceQueries {
     * part files instead of one big archive: the parallelism unit
     * becomes the file. */
   def gzipRoundtrip(s: SparkSession, dir: String): DataFrame =
-    gzCache.getOrElseUpdate((s, dir), Scratch.cleaned("graft_gz") { tmp =>
+    gzCache(s, dir)(Scratch.cleaned("graft_gz") { tmp =>
       Tables.documents(s, dir)
         .select(concat(col("doc_id").cast("string"), lit("\t"),
           regexp_replace(col("text"), "\n", " ")).as("line"))
@@ -216,8 +207,7 @@ object SourceQueries {
         .orderBy("doc_id")
     })
 
-  private val sizingCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val sizingCache = Memo.frames
 
   /** #52' output-sizing audit, sql-decidable: [[graft.sources.CorpusWriter]]'s
     * two writers exercised against the lake and read back through
@@ -227,7 +217,7 @@ object SourceQueries {
     * with that lang's row count. Long-form (metric, n_files, n_rows)
     * rows so one oracle covers both writers. */
   def writeSizing(s: SparkSession, dir: String): DataFrame =
-    sizingCache.getOrElseUpdate((s, dir), Scratch.cleaned("graft_sizing") { tmp =>
+    sizingCache(s, dir)(Scratch.cleaned("graft_sizing") { tmp =>
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "source", "n_chars")
       graft.sources.CorpusWriter.writeSized(docs, tmp.resolve("sized").toString, 100L)
       val sized = s.read.parquet(tmp.resolve("sized").toString)
@@ -247,8 +237,7 @@ object SourceQueries {
       sized.unionAll(parted).orderBy("metric")
     })
 
-  private val binfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val binfCache = Memo.frames
 
   /** #17h opaque-blob ingestion via Spark's `binaryFile` source — the
     * path every non-splittable media/artifact lake uses: one file per
@@ -259,7 +248,7 @@ object SourceQueries {
     * hash to the same digest — a charset or ordering slip in either
     * direction breaks every row. */
   def binaryfileScan(s: SparkSession, dir: String): DataFrame =
-    binfCache.getOrElseUpdate((s, dir), Scratch.cleaned("graft_binf") { tmp =>
+    binfCache(s, dir)(Scratch.cleaned("graft_binf") { tmp =>
       val perSource = Tables.documents(s, dir)
         .groupBy("source")
         .agg(array_sort(collect_list(struct(col("doc_id"), col("text")))).as("xs"))
@@ -296,7 +285,7 @@ object SourceQueries {
     * fact scan's PartitionFilters at runtime (pinned by a plan
     * contract). Weekday partitions are never read. */
   def dppScan(s: SparkSession, dir: String): DataFrame =
-    dppCache.getOrElseUpdate((s, dir), Scratch.cleaned("graft_dpp") { tmp =>
+    dppCache(s, dir)(Scratch.cleaned("graft_dpp") { tmp =>
       val ev = Tables.events(s, dir).withColumn("day", to_date(col("ts")))
       ev.write.mode("overwrite").partitionBy("day").parquet(tmp.toString)
       dppJoin(s, tmp.toString, ev)
@@ -319,8 +308,7 @@ object SourceQueries {
       .orderBy("day_num")
   }
 
-  private val dppCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val dppCache = Memo.frames
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dpp_scan"        -> (dppScan _),

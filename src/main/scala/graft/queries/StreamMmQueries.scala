@@ -281,8 +281,7 @@ object StreamMmQueries {
     EventStream.runSlidingBatchEquivalent(s, dir)
       .orderBy("window_start", "event_type")
 
-  private val ckptCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val ckptCache = Memo.frames
 
   /** #29g checkpointed incremental ingest, sql-decidable: the same
     * file-stream source is drained TWICE against ONE checkpoint
@@ -294,7 +293,7 @@ object StreamMmQueries {
     * recomputes from the documents table — exactly-once restart
     * semantics, hash-checked. */
   def streamCheckpoint(s: SparkSession, dir: String): DataFrame =
-    ckptCache.getOrElseUpdate((s, dir), Scratch.cleaned("graft_ckpt") { tmp =>
+    ckptCache(s, dir)(Scratch.cleaned("graft_ckpt") { tmp =>
       import java.nio.file.Files
       val src = tmp.resolve("src"); val ckpt = tmp.resolve("ckpt")
       Files.createDirectories(src)

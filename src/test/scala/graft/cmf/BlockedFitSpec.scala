@@ -2,9 +2,8 @@ package graft.cmf
 
 import java.util.concurrent.atomic.AtomicBoolean
 
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 
 /** The blocked fit: equal to a dense single-machine fit under any block
   * geometry, bitwise reproducible, safe to run concurrently on one
@@ -114,8 +113,7 @@ class BlockedFitSpec extends SparkSpec {
     assert(seen.keySet == Set(conf), s"$key read ${seen.keySet} during the fits")
   }
 
-  private def checkpointId(df: DataFrame): Int =
-    df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd.id }.get
+  private def checkpointId(df: DataFrame): Int = Tables.checkpoints(df).head.id
 
   test("a fit leaves only the model's factor tables persisted") {
     val sc = spark.sparkContext
