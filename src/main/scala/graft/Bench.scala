@@ -39,8 +39,8 @@ object Bench {
   val replicateOverSec = 10.0
 
   /** Shared-input materializations, timed explicitly: these memoized
-    * tables/models (localCheckpoint + per-(session, dir) caches in the
-    * queries layer) are consumed by several queries each; without these
+    * tables/models (`Tables.checkpoint` + a per-(session, dir)
+    * `queries.Memo`) are consumed by several queries each; without these
     * entries their cost lands on the alphabetically-first consumer
     * (round 3: als_explicit recorded 25.4 s of which ~17 s was building
     * custPartRatings + the shared fit). Ordering is dependency order,

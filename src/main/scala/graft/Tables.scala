@@ -1,5 +1,6 @@
 package graft
 
+import scala.collection.mutable
 import scala.reflect.ClassTag
 
 import org.apache.spark.{Dependency, OneToOneDependency, Partition, SparkContext, TaskContext}
@@ -8,6 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.storage.StorageLevel
 
 /** Accessors for the driver-generated parquet tables in a scale-factor dir.
   * Plain `spark.read.parquet` so Catalyst owns pushdown/pruning decisions.
@@ -109,9 +111,36 @@ object Tables {
     * tens of MB for the narrow dim-scale rows it gates. */
   val BroadcastRowLimit = 5000000L
 
+  /** `df` eagerly local-checkpointed at `level`: the one way this library
+    * materializes a frame. The checkpoint RDD's id is recorded under
+    * `df.sparkSession`, so [[releaseSession]] can free it even when no
+    * frame that reads it is left to hand to [[release]]. Only the id is
+    * kept: an unreachable checkpoint still goes to the ContextCleaner. */
+  def checkpoint(df: DataFrame): DataFrame = checkpoint(df, StorageLevel.MEMORY_AND_DISK)
+
+  def checkpoint(df: DataFrame, level: StorageLevel): DataFrame = {
+    val c = df.localCheckpoint(true, level)
+    made.synchronized(made.computeIfAbsent(df.sparkSession, _ => mutable.Set.empty[Int]) ++= checkpoints(c).map(_.id))
+    c
+  }
+
+  /** Unpersist the checkpoint RDDs `df` reads. `Dataset.unpersist` does
+    * nothing to them; call this once nothing will read `df` again. */
+  def release(df: DataFrame): Unit = checkpoints(df).foreach(_.unpersist(blocking = false))
+
+  /** Unpersist every checkpoint [[checkpoint]] made under `s` that is still
+    * persisted, and forget their ids. */
+  private[graft] def releaseSession(s: SparkSession): Unit = {
+    val ids = made.synchronized(Option(made.remove(s)).fold(Seq.empty[Int])(_.toSeq))
+    val live = s.sparkContext.getPersistentRDDs
+    ids.flatMap(live.get).foreach(_.unpersist(blocking = false))
+  }
+
+  /** Ids of the checkpoints made under each session, the session held weakly. */
+  private val made = new java.util.WeakHashMap[SparkSession, mutable.Set[Int]]
+
   /** The checkpoint RDDs `df` reads: the RDD under each `LogicalRDD` of its
-    * logical plan. `localCheckpoint` persists that RDD, and
-    * `Dataset.unpersist` does not drop it: release it through the RDD. */
+    * logical plan. */
   def checkpoints(df: DataFrame): Seq[RDD[_]] =
     df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
 

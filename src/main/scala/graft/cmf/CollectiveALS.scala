@@ -2,10 +2,9 @@ package graft.cmf
 
 import scala.collection.mutable
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -142,7 +141,10 @@ class CollectiveALS(entityNames: String*) extends Serializable {
     }.toArray
     // Every RDD the fit persists (rating blocks, in-loop factor blocks) is
     // released here whether the fit returns or throws; a failed fit also
-    // releases the model tables it had already checkpointed.
+    // releases the model tables it had already checkpointed, and the one
+    // whose checkpoint job failed: Spark persists a checkpoint's RDD before
+    // its job runs and returns no frame to release it through, so it is
+    // found as a persisted RDD that reads what the fit holds.
     val held = mutable.ArrayBuffer.empty[RDD[_]]
     val tables = mutable.ArrayBuffer.empty[DataFrame]
     var done = false
@@ -151,8 +153,11 @@ class CollectiveALS(entityNames: String*) extends Serializable {
       done = true
       model
     } finally {
+      if (!done) {
+        tables.foreach(graft.Tables.release)
+        readersOf(spark.sparkContext, held.map(_.id).toSet).foreach(_.unpersist(false))
+      }
       held.foreach(_.unpersist(false))
-      if (!done) tables.foreach(t => checkpointOf(t).foreach(_.unpersist(false)))
     }
   }
 
@@ -281,11 +286,11 @@ class CollectiveALS(entityNames: String*) extends Serializable {
     * [[finalStorageLevel]]. */
   private def table(spark: SparkSession, layout: RDD[Block], f: RDD[Array[Float]], k: Int): DataFrame = {
     import spark.implicits._
-    layout.zipPartitions(f) { (bi, fi) =>
+    graft.Tables.checkpoint(layout.zipPartitions(f) { (bi, fi) =>
       val b = bi.next()
       val x = fi.next()
       Iterator.tabulate(b.ids.length)(d => (b.ids(d), java.util.Arrays.copyOfRange(x, d * k, d * k + k)))
-    }.toDF("id", "features").localCheckpoint(true, finalStorageLevel)
+    }.toDF("id", "features"), finalStorageLevel)
   }
 }
 
@@ -298,9 +303,19 @@ object CollectiveALS {
   /** The block of `id` among `n` blocks of its entity. */
   private[cmf] def blockOf(id: Long, n: Int): Int = java.lang.Math.floorMod(java.lang.Long.hashCode(id), n)
 
-  /** The persisted RDD behind a checkpointed frame. */
-  private def checkpointOf(df: DataFrame): Option[RDD[_]] =
-    df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
+  /** The persisted RDDs, other than `ids` and newer than all of them, whose
+    * lineage reads one of `ids`. */
+  private def readersOf(sc: SparkContext, ids: Set[Int]): Iterable[RDD[_]] = {
+    val reads = mutable.Map.empty[Int, Boolean]
+    def walk(r: RDD[_]): Boolean = reads.get(r.id) match {
+      case Some(b) => b
+      case None =>
+        val b = r.dependencies.exists(d => ids(d.rdd.id) || walk(d.rdd))
+        reads(r.id) = b
+        b
+    }
+    if (ids.isEmpty) Nil else sc.getPersistentRDDs.values.filter(r => r.id > ids.max && walk(r))
+  }
 
   /** Rating rows bound for one block, columnar: `side`, `dst` (an id of the
     * block's entity), `src` (an id of the other entity), `rating`. */

@@ -40,6 +40,10 @@ class CollectiveALSModel(
 
   def factorsFor(entity: String): DataFrame = factors(indexOf(entity))
 
+  /** Unpersist the checkpoints of a fitted model's factor tables; the model
+    * cannot be read afterwards. A loaded model reads parquet and holds none. */
+  def release(): Unit = factors.foreach(graft.Tables.release)
+
   private def indexOf(entity: String): Int = cols.indexOf(entity) match {
     case -1 => throw new IllegalArgumentException(s"Unknown entity: $entity")
     case i  => i

@@ -28,7 +28,7 @@ object Bfs {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col(srcCol).cast("long").as("s"),
-      col(dstCol).cast("long").as("t")).localCheckpoint(true)
+      col(dstCol).cast("long").as("t")).transform(graft.Tables.checkpoint)
     var dist = Seq((source, 0L)).toDF("v", "dist")
     for (k <- 1 to maxHops) {
       val next = dist.filter(col("dist") === (k - 1))
@@ -36,7 +36,7 @@ object Bfs {
         .select(col("t").as("v"), lit(k.toLong).as("dist"))
       dist = dist.unionAll(next)
         .groupBy("v").agg(min("dist").as("dist"))
-        .localCheckpoint(true)
+        .transform(graft.Tables.checkpoint)
     }
     dist
   }

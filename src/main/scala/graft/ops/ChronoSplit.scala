@@ -52,7 +52,7 @@ object ChronoSplit {
     // re-execute per slice consumed.
     val ranked = withGlobalRank(df, timeCol, tieCol,
       if (numBuckets > 0) numBuckets else adaptiveBuckets(n))
-      .localCheckpoint(true)
+      .transform(graft.Tables.checkpoint)
     val sum = weights.sum
     // Cumulative row-count boundaries: slice i = ranks (k(i-1), k(i)].
     val ks = weights.scanLeft(0.0)(_ + _).map(c => math.floor(c / sum * n).toLong)

@@ -32,7 +32,7 @@ object Cooccur {
     val sized = b0.groupBy("basket").agg(count(lit(1)).as("bsz"))
       .filter(col("bsz") <= maxBasketSize)
     val b = b0.join(sized, "basket").select("basket", "item")
-      .localCheckpoint(true)
+      .transform(graft.Tables.checkpoint)
     val nBaskets = b.select("basket").distinct().count()
     val marg = b.groupBy("item").agg(count(lit(1)).as("n_item"))
     b.as("x").join(b.as("y"),
@@ -69,7 +69,7 @@ object Cooccur {
     val cold = ei.groupBy("item").agg(count(lit(1)).as("idf"))
       .filter(col("idf") <= maxItemDf)
     val kept = ei.join(cold.select("item"), "item")
-      .localCheckpoint(true)
+      .transform(graft.Tables.checkpoint)
     val sizes = kept.groupBy("entity").agg(count(lit(1)).as("sz"))
     kept.as("x").join(kept.as("y"),
         col("x.item") === col("y.item") && col("x.entity") < col("y.entity"))

@@ -127,7 +127,7 @@ object Decontaminate {
     // recompute the shingling after the Bloom bits were built from it.
     val evalSh = shingled(evalSet, evalTextCol, monotonically_increasing_id())
       .select("shingle").distinct()
-      .localCheckpoint(true)
+      .transform(graft.Tables.checkpoint)
     val nEvalRaw = evalSh.count()
     if (nEvalRaw == 0L) {
       // No eval shingles at all (texts shorter than n): nothing can be

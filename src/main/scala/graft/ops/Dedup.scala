@@ -94,7 +94,7 @@ object Dedup {
     // re-projecting lev above). The materialized set is only the
     // length-pruned candidates.
     graft.Tables.fanOut(pruned, df)
-      .localCheckpoint(true)
+      .transform(graft.Tables.checkpoint)
       .withColumn("lev", levenshtein(col("ta"), col("tb"), maxEdit).cast("long"))
       .filter(col("lev") >= 0 && col("lev") <= maxEdit)
       .select(col("id_a").as(idCol + "_a"), col("id_b").as(idCol + "_b"), col("lev"))
@@ -215,9 +215,9 @@ object Dedup {
     * plus several downstream branches (per-doc sizes + self-join sides)
     * and would otherwise re-run the shingling pass per branch.
     * Only the table the downstream branches actually consume is
-    * localCheckpointed (checkpoint blocks have no release path); when
-    * the cap binds, the raw pre-cap index is persist()ed just long
-    * enough to feed the capped materialization, then unpersisted. */
+    * checkpointed; when the cap binds, the raw pre-cap index is
+    * persist()ed just long enough to feed the capped materialization,
+    * then unpersisted. */
   private def cappedShingleIndex(
       df: DataFrame,
       textCol: String,
@@ -239,10 +239,10 @@ object Dedup {
         shinglesJvm(t, nn).map(s => (id, Hashing.xxh64(s, 42L)))
       })
       .toDF("id", "shingle")
-    if (maxShingleDf == Int.MaxValue) rawPlan.localCheckpoint(true) // cap cannot bind — skip the df pass
+    if (maxShingleDf == Int.MaxValue) graft.Tables.checkpoint(rawPlan) // cap cannot bind — skip the df pass
     else {
       val raw = rawPlan.persist()
-      try dfCapped(raw, maxShingleDf).localCheckpoint(true) // eager: materializes while raw is cached
+      try dfCapped(raw, maxShingleDf).transform(graft.Tables.checkpoint) // eager: materializes while raw is cached
       finally raw.unpersist(false)
     }
   }
@@ -428,7 +428,7 @@ object Dedup {
     val withSh = texts
       .mapPartitions(_.map { case (id, t) => (id, shinglesJvm(t, nn)) })
       .toDF("id", "sh")
-      .localCheckpoint(true)
+      .transform(graft.Tables.checkpoint)
     // Signatures in one per-partition primitive pass over the cached
     // shingle arrays (one byte-level xxh64 per shingle, numHashes cheap
     // long-mixes). Emits (id, band, bandKey) directly.
@@ -564,14 +564,14 @@ object Dedup {
       bCol: String,
       maxRounds: Int = 16): DataFrame = {
     val edges = pairs.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-    // Undirected adjacency, cached: reused every round.
+    // Undirected adjacency, checkpointed: reused every round.
     val adj = edges.unionAll(edges.select(col("b").as("a"), col("a").as("b")))
       .distinct()
-      .localCheckpoint(true)
+      .transform(graft.Tables.checkpoint)
     var labels = adj.select(col("a").as("id"), col("a").as("cluster"))
       .unionAll(adj.select(col("b").as("id"), col("b").as("cluster")))
       .groupBy("id").agg(min("cluster").as("cluster"))
-      .localCheckpoint(true)
+      .transform(graft.Tables.checkpoint)
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
@@ -581,7 +581,7 @@ object Dedup {
         .select(adj("a").as("id"), col("cluster"))
       val hop = labels.unionAll(neighborLabels)
         .groupBy("id").agg(min("cluster").as("cluster"))
-        .localCheckpoint(true)
+        .transform(graft.Tables.checkpoint)
       // 2. pointer jump: cluster := min(cluster, cluster(cluster)) —
       //    every label is itself a node id, so the lookup always resolves;
       //    this doubles the distance minima travel per round.
@@ -589,20 +589,21 @@ object Dedup {
       val next = hop.join(byId, Seq("cluster"), "left")
         .select(col("id"),
           least(col("cluster"), coalesce(col("jump"), col("cluster"))).as("cluster"))
-        .localCheckpoint(true)
+        .transform(graft.Tables.checkpoint)
       val changed = next.join(labels,
           next("id") === labels("id") && next("cluster") =!= labels("cluster"))
         .limit(1).count()
-      hop.unpersist(false)
-      labels.unpersist(false)
+      // `next` is materialized, so nothing reads these two again.
+      graft.Tables.release(hop)
+      graft.Tables.release(labels)
       converged = changed == 0
       labels = next
       round += 1
     }
+    graft.Tables.release(adj)
     if (!converged)
       throw new IllegalStateException(
         s"connected components did not converge in $maxRounds rounds")
-    adj.unpersist(false)
     labels
   }
 
@@ -718,7 +719,7 @@ object Dedup {
       val eligible = selP.groupBy("h").agg(count(lit(1)).as("gdf"))
         .filter(col("gdf") >= 2 && col("gdf") <= maxGramDf)
         .select("h")
-      selP.join(eligible, Seq("h")).localCheckpoint(true)
+      selP.join(eligible, Seq("h")).transform(graft.Tables.checkpoint)
     } finally selP.unpersist(false)
     val a = kept.as("a")
     val b = kept.as("b")
@@ -992,7 +993,7 @@ object Dedup {
       col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(Similarity.dot(col("v"), col("v"))))
       .filter(col("nrm") > 0)
-      .localCheckpoint(true)
+      .transform(graft.Tables.checkpoint)
     val dim = Similarity.dimOf(e, "v")
     val hp: Array[Array[Double]] =
       Similarity.hyperplanes(dim, planes, seed).map(_.toArray).toArray

@@ -30,7 +30,7 @@ object LabelProp {
     val e = edges.select(col(aCol).as("ea"), col(bCol).as("eb"))
     val sym = e.select(col("ea").as("u"), col("eb").as("v"))
       .unionAll(e.select(col("eb").as("u"), col("ea").as("v")))
-      .localCheckpoint(true)
+      .transform(graft.Tables.checkpoint)
     var labels = sym.select(col("u").as("lv")).distinct()
       .withColumn("lab", col("lv"))
     for (_ <- 1 to iters) {

@@ -34,8 +34,8 @@ object PageRank {
     require(iterations >= 1, "need at least one iteration")
     require(damping > 0 && damping < 1, "damping in (0, 1)")
     val e = edges.select(col(srcCol).cast("long").as("s"),
-      col(dstCol).cast("long").as("t")).localCheckpoint(true)
-    val deg = e.groupBy("s").agg(count(lit(1)).as("d")).localCheckpoint(true)
+      col(dstCol).cast("long").as("t")).transform(graft.Tables.checkpoint)
+    val deg = e.groupBy("s").agg(count(lit(1)).as("d")).transform(graft.Tables.checkpoint)
     val n = deg.count().toDouble
     require(n > 0, "edge list is empty")
     // Degrees attach to the edge list ONCE outside the walk, and the
@@ -57,7 +57,7 @@ object PageRank {
         .agg(sum(col("p") / col("d")).as("m"))
         .select(col("t").as("v"),
           (lit((1 - damping) / n) + lit(damping) * col("m")).as("p"))
-        .localCheckpoint(true)
+        .transform(graft.Tables.checkpoint)
     }
     p
   }

@@ -239,7 +239,7 @@ object Pq {
     val model = train(resid, "id", "ruv", m, k, seed, padShort = true)
     val codedCells = encode(resid, "id", "ruv", model)
       .join(resid.select(col("id"), col("cell")), Seq("id"))
-      .localCheckpoint(true)
+      .transform(graft.Tables.checkpoint)
     new IvfPqIndex(ivf.centroids, model, codedCells)
   }
 
@@ -443,7 +443,7 @@ final class IvfPqIndex private[ops] (
     val resid = Pq.withResidual(unit, centroids)
     val coded = Pq.encode(resid, "id", "ruv", model)
       .join(resid.select(col("id"), col("cell")), Seq("id"))
-      .localCheckpoint(true)
+      .transform(graft.Tables.checkpoint)
     new IvfPqIndex(centroids, model, codedCells.unionAll(coded))
   }
 }

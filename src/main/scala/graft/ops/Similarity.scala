@@ -260,7 +260,7 @@ final class IvfIndex private[ops] (
     new IvfIndex(centroids,
       assigned.unionAll(
         IvfIndex.assignToCells(centroids, newRows, idCol, vecCol)
-          .localCheckpoint(true)))
+          .transform(graft.Tables.checkpoint)))
 
   /** Persist: the assigned corpus as parquet (natural partitioning, so
     * a billion-vector index writes in parallel) + centroids as JSON. */
@@ -371,7 +371,7 @@ object LshIndex {
     val banded =
       Similarity.banded(Similarity.normalized(corpus, idCol, vecCol), hp, bands, "c")
     new LshIndex(hp, bands,
-      if (materialize) banded.localCheckpoint(true) else banded)
+      if (materialize) graft.Tables.checkpoint(banded) else banded)
   }
 
   /** Load an index written by [[LshIndex.save]]. */
@@ -400,12 +400,11 @@ object IvfIndex {
     import org.apache.spark.ml.functions.array_to_vector
 
     // Unit-normalize for training/assignment so euclidean k-means cells
-    // group by direction (= cosine neighborhoods). persist (not
-    // localCheckpoint): both the k-means iterations and the assignment
-    // pass read one snapshot — a nondeterministic corpus lineage can't
-    // diverge between them — and unpersist below releases the blocks
-    // once the assigned table is materialized (localCheckpoint blocks
-    // have no clean release path from the Dataset API).
+    // group by direction (= cosine neighborhoods). Persisted: both the
+    // k-means iterations and the assignment pass read one snapshot — a
+    // nondeterministic corpus lineage can't diverge between them — and
+    // unpersist below releases the blocks once the assigned table is
+    // materialized.
     val c = Similarity.withUnit(corpus, idCol, vecCol)
       .withColumn("fv", array_to_vector(col("uv")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -432,7 +431,7 @@ object IvfIndex {
         }.toSeq
         val assigned = IvfIndex
           .assignToCells(centers, c.select(col("id"), col("v")), "id", "v")
-          .localCheckpoint(true)
+          .transform(graft.Tables.checkpoint)
         return new IvfIndex(centers, assigned)
       }
       val model = new KMeans()
@@ -445,7 +444,7 @@ object IvfIndex {
       val assigned = model.transform(c)
         .select(col("id").as("cid"), col("v").as("cv"), col("nrm").as("cn"),
           col("prediction").as("cell"))
-        .localCheckpoint(true)
+        .transform(graft.Tables.checkpoint)
       val centers = model.clusterCenters
         .map(cc => (cc.toArray.toSeq, cc.toArray.map(x => x * x).sum)).toSeq
       new IvfIndex(centers, assigned)

@@ -115,7 +115,7 @@ object Sketches {
           Iterator((None: Option[String], Some(n)))
       }
       .toDF("item", "n_part")
-      .localCheckpoint(true) // tiny (≤ partitions × (k+1) rows)
+      .transform(graft.Tables.checkpoint) // tiny (≤ partitions × (k+1) rows)
     val total = summary.agg(coalesce(sum("n_part"), lit(0L))).head.getLong(0)
     val candidates = summary.filter(col("item").isNotNull)
       .select("item").distinct()

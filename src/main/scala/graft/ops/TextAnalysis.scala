@@ -634,8 +634,8 @@ object TextAnalysis {
     val edges = pc.select(col("wa").as("s"), col("wb").as("t"))
       .unionAll(pc.select(col("wb").as("s"), col("wa").as("t")))
       .distinct()
-      .localCheckpoint(true)
-    val deg = edges.groupBy("s").agg(count(lit(1)).as("d")).localCheckpoint(true)
+      .transform(graft.Tables.checkpoint)
+    val deg = edges.groupBy("s").agg(count(lit(1)).as("d")).transform(graft.Tables.checkpoint)
     val n = deg.count()
     if (n == 0) {
       // No co-occurrence edges at all (too few/short docs): no
@@ -652,7 +652,7 @@ object TextAnalysis {
         .agg(sum(round(col("pp").cast("double") / col("d")).cast("long")).as("m"))
         .select(col("t").as("v"),
           (lit(base) + round(lit(0.85) * col("m")).cast("long")).as("pp"))
-        .localCheckpoint(true)
+        .transform(graft.Tables.checkpoint)
     }
     p.select(col("v").as("word"), round(col("pp") / lit(1.0e12), 6).as("rank"),
         col("pp"))

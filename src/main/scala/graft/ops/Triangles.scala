@@ -22,7 +22,7 @@ object Triangles {
     * so the three self-join branches never recompute its lineage. */
   def perVertex(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val e = edges.select(col(srcCol).cast("long").as("s"),
-      col(dstCol).cast("long").as("t")).localCheckpoint(true)
+      col(dstCol).cast("long").as("t")).transform(graft.Tables.checkpoint)
     val tri = e.as("ab")
       .join(e.as("bc"), col("ab.t") === col("bc.s"))
       .join(e.as("ac"), col("ac.s") === col("ab.s") && col("ac.t") === col("bc.t"))
@@ -39,7 +39,7 @@ object Triangles {
     * [[perVertex]]. */
   def localClustering(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val e = edges.select(col(srcCol).cast("long").as("s"),
-      col(dstCol).cast("long").as("t")).localCheckpoint(true)
+      col(dstCol).cast("long").as("t")).transform(graft.Tables.checkpoint)
     val deg = e.select(col("s").as("v"))
       .unionAll(e.select(col("t").as("v")))
       .groupBy("v").agg(count(lit(1)).as("degree"))

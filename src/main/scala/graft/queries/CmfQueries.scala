@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   */
 object CmfQueries {
 
-  private val ratingsCache = Memo.frames
-  private val modelCache = Memo[CollectiveALSModel](_.factors)
+  private val ratingsCache = new Memo[DataFrame]
+  private val modelCache = new Memo[CollectiveALSModel]
 
-  /** Materialized once per (session, dir) (localCheckpoint + memo): the
+  /** Materialized once per (session, dir) (`Tables.checkpoint` + memo): the
     * same ratings feed every fit (which re-layouts them internally), every
     * predict join, and the driver's sink re-executions — a real pipeline
     * derives its interaction table once, not once per downstream consumer. */
@@ -30,7 +30,7 @@ object CmfQueries {
         .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_custkey").as("cust"), col("l_partkey").as("part"))
         .agg(sum("l_quantity").cast("float").as("rating"))
-        .localCheckpoint(true))
+        .transform(Tables.checkpoint))
 
   /** #13d deterministic negative sampling for implicit-feedback
     * training (the BPR/word2vec data-prep step): two pseudo-negatives
@@ -68,7 +68,7 @@ object CmfQueries {
         .setRank(8).setMaxIter(3).setRegParam(0.1).setSeed(42L)
         .fit(custPartRatings(s, dir)))
 
-  private val pairsCache = Memo.frames
+  private val pairsCache = new Memo[DataFrame]
 
   def partSuppPairs(s: SparkSession, dir: String): DataFrame =
     pairsCache(s, dir)(
@@ -76,7 +76,7 @@ object CmfQueries {
         .select(col("l_partkey").as("part"), col("l_suppkey").as("supp"))
         .distinct()
         .withColumn("rating", lit(1.0f))
-        .localCheckpoint(true))
+        .transform(Tables.checkpoint))
 
   /** #8 + #12: explicit two-entity ALS fit + predict. (Rows-only driver
     * check — no global sort on the 600k-row output.) */
@@ -84,7 +84,7 @@ object CmfQueries {
     explicitModel(s, dir).predict(custPartRatings(s, dir))
       .select(col("cust"), col("part"), col("prediction"))
 
-  private val implicitPredCache = Memo.frames
+  private val implicitPredCache = new Memo[DataFrame]
 
   /** #9: implicit-prefs (Hu-Koren) ALS fit + predict; quantity is the
     * confidence signal. Materialized once per (session, dir): the
@@ -98,7 +98,7 @@ object CmfQueries {
         .fit(ratings)
       model.predict(ratings)
         .select(col("cust"), col("part"), col("prediction"))
-        .localCheckpoint(true)
+        .transform(Tables.checkpoint)
     }
 
   /** #9b implicit predict coverage shape — same invariants as
@@ -112,7 +112,7 @@ object CmfQueries {
       count_distinct(col("cust")).as("n_custs"),
       count_distinct(col("part")).as("n_parts"))
 
-  private val nonnegPredCache = Memo.frames
+  private val nonnegPredCache = new Memo[DataFrame]
 
   /** #11: nonnegative (NNLS-solved) explicit fit + predict — factors are
     * constrained to the first quadrant; the spec asserts nonnegativity
@@ -126,7 +126,7 @@ object CmfQueries {
         .fit(ratings)
       model.predict(ratings)
         .select(col("cust"), col("part"), col("prediction"))
-        .localCheckpoint(true)
+        .transform(Tables.checkpoint)
     }
 
   /** #11b nonnegative predict shape, sql-decidable without factor
@@ -142,7 +142,7 @@ object CmfQueries {
       sum(when(isnan(col("prediction")), 1L).otherwise(0L)).as("n_nan"),
       sum(when(col("prediction") < 0, 1L).otherwise(0L)).as("n_neg"))
 
-  private val cmfPredCache = Memo.frames
+  private val cmfPredCache = new Memo[DataFrame]
 
   /** #10: three-entity collective fit — customer→part ratings share the
     * part factors with part→supplier attributes; predict on both
@@ -161,7 +161,7 @@ object CmfQueries {
       val p2 = model.predict(r2, "part", "supp")
         .select(lit("part_supp").as("relation"),
           col("part").as("left_id"), col("supp").as("right_id"), col("prediction"))
-      p1.unionAll(p2).localCheckpoint(true)
+      p1.unionAll(p2).transform(Tables.checkpoint)
     }
 
   /** #10c collective predict coverage shape, sql-decidable: per
@@ -196,7 +196,7 @@ object CmfQueries {
     * adds only the Gram matrices of relations that actually observe it
     * (with a single relation that mask branch is trivial). Quantity is
     * the cust→part confidence signal; part→supp attributes are binary. */
-  private val cmfImplCache = Memo.frames
+  private val cmfImplCache = new Memo[DataFrame]
 
   def cmfImplicit(s: SparkSession, dir: String): DataFrame =
     cmfImplCache(s, dir) {
@@ -214,7 +214,7 @@ object CmfQueries {
           col("part").as("left_id"), col("supp").as("right_id"), col("prediction"))
       // Materialized once per (session, dir): the #10b predict query and
       // its #10c' shape audit read one implicit fit, not two.
-      p1.unionAll(p2).localCheckpoint(true)
+      p1.unionAll(p2).transform(Tables.checkpoint)
     }
 
   /** #13: blocked top-k recommendation for a deterministic 1-in-20 user
@@ -252,7 +252,7 @@ object CmfQueries {
     * (same factors through the same fused dot ⇒ bitwise-equal floats;
     * Spark's EqualTo treats NaN = NaN as true, and n_nan pins zero NaN
     * anyway), with full row coverage. */
-  private val roundtripCache = Memo.frames
+  private val roundtripCache = new Memo[DataFrame]
 
   def modelRoundtripShape(s: SparkSession, dir: String): DataFrame =
     // Memoized + scratch-cleaned (one save/load per (session, dir), no
@@ -324,7 +324,7 @@ object CmfQueries {
       .orderBy("mode")
   }
 
-  private val fitQualityCache = Memo.frames
+  private val fitQualityCache = new Memo[DataFrame]
 
   /** #8c driver-visible fit QUALITY (not just coverage shape): a
     * chronological 80/20 holdout over the time-stamped ratings (last
@@ -364,7 +364,7 @@ object CmfQueries {
         // split() makes four passes over its input (count, quantile
         // probe, bucket aggregate, rank checkpoint) — materialize the
         // join+agg lineage once instead of re-executing it per pass.
-        .localCheckpoint(true)
+        .transform(Tables.checkpoint)
       val Seq(train, test) =
         graft.ops.ChronoSplit.split(rated, Seq(0.8, 0.2), "t", "tie")
       val model = new CollectiveALS("cust", "part")
@@ -375,7 +375,7 @@ object CmfQueries {
       val tstats = train.agg(avg("rating"), stddev_pop("rating")).head()
       val trainMean = tstats.getDouble(0)
       val pred = model.predict(test.select("cust", "part", "rating"))
-        .localCheckpoint(true)
+        .transform(Tables.checkpoint)
       val hold = pred.filter(!isnan(col("prediction")))
         .agg(count(lit(1)).as("n_eval"),
           sqrt(avg(pow(col("prediction") - col("rating"), 2))).as("rmse"),
@@ -384,7 +384,7 @@ object CmfQueries {
       val nTest = test.count()
 
       val predTrain = model.predict(train.select("cust", "part", "rating"))
-        .localCheckpoint(true)
+        .transform(Tables.checkpoint)
       val evTrain = RegressionEvaluation
         .evaluate(predTrain, "rating", "prediction").head()
       val sdTrain = tstats.getDouble(1)
@@ -435,7 +435,7 @@ object CmfQueries {
       .withColumn("tie", col("cust") * lit(10000000L) + col("part"))
       // Same discipline as fitQuality: split() re-reads its input four
       // times — materialize the planted-rating lineage once.
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     val Seq(train, test) =
       graft.ops.ChronoSplit.split(rated, Seq(0.8, 0.2), "t", "tie")
     val mu = train.agg(avg("rating")).head().getDouble(0)
@@ -445,18 +445,18 @@ object CmfQueries {
     // reads the same bias values the residuals were built from.
     val bu = train.groupBy("cust")
       .agg((sum(col("rating") - mu) / (count(lit(1)) + lit(10.0))).as("b_u"))
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     val bi = train.join(bu, "cust").groupBy("part")
       .agg((sum(col("rating") - mu - col("b_u")) / (count(lit(1)) + lit(10.0)))
         .as("b_i"))
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     // fit() itself counts its input before laying it out — hand it a
     // materialized residual table, not the three-way join pipeline.
     val resid = train.join(bu, "cust").join(bi, "part")
       .select(col("cust"), col("part"),
         (col("rating") - mu - col("b_u") - col("b_i"))
           .cast("float").as("rating"))
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     val model = new CollectiveALS("cust", "part")
       .setRank(8).setMaxIter(5).setRegParam(0.1).setSeed(42L)
       .fit(resid)
@@ -495,7 +495,7 @@ object CmfQueries {
   // same (customer, part, Σquantity) ratings under the same ≤100-ratings
   // hot-user cap — one derivation + materialization serves both (timed as
   // `_mat_corated` in the bench so neither consumer's entry absorbs it).
-  private val coratedCache = Memo.frames
+  private val coratedCache = new Memo[DataFrame]
 
   private[graft] def coratedCapped(s: SparkSession, dir: String): DataFrame =
     coratedCache(s, dir) {
@@ -512,7 +512,7 @@ object CmfQueries {
         // query) would then run as ONE task. The checkpointed
         // hashpartitioning(u) is reused by the joins exchange-free.
         .repartition(s.sparkContext.defaultParallelism, col("u"))
-        .localCheckpoint(true)
+        .transform(Tables.checkpoint)
     }
 
   /** [[cfItemPredict]]'s item-item cosine over the capped co-rating
@@ -554,7 +554,7 @@ object CmfQueries {
     // hint is row-count-gated (broadcastIfSmall): at a web-scale item
     // universe the joins degrade to the old sort-merge instead of
     // OOMing the driver; the checkpoint makes the gating count cheap.
-    val n2c = n2.localCheckpoint(true)
+    val n2c = Tables.checkpoint(n2)
     val simsHalf = a.join(b, Seq("u")).filter(col("i") < col("j"))
       .groupBy("i", "j").agg(sum(col("q") * col("qj")).as("dot"))
       .join(Tables.broadcastIfSmall(
@@ -579,7 +579,7 @@ object CmfQueries {
         Window.partitionBy("i").orderBy(col("sim_u").desc, col("j"))))
       .filter(col("rn") <= 10)
       .select("i", "j", "sim_u")
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     // top is ≤ 10·|items| rows (dim-scale) — broadcast it (same row-count
     // gate) so the rating table is not shuffled by i just to pick up its
     // neighbor list. The (u, j) join keeps the shuffle: its right side is

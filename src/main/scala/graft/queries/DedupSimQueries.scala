@@ -22,7 +22,7 @@ object DedupSimQueries {
       expr("substring(text, 1, greatest(length(text) - 40, 1))").as("text")))
   }
 
-  private val pairsCache = Memo.frames
+  private val pairsCache = new Memo[DataFrame]
 
   /** Exact n-gram Jaccard pairs over the planted-mutation corpus,
     * materialized once per (session, dir): the pair list and its
@@ -37,7 +37,7 @@ object DedupSimQueries {
     pairsCache(s, dir)(
       Dedup.ngramJaccard(withMutations(s, dir), "text", "doc_id", n = 3, minJaccard = 0.6,
         maxShingleDf = 10)
-        .localCheckpoint(true))
+        .transform(Tables.checkpoint))
 
   /** #19 n-gram Jaccard near-dup over the planted-mutation corpus. */
   def dedupNgramJaccard(s: SparkSession, dir: String): DataFrame =
@@ -339,7 +339,7 @@ object DedupSimQueries {
     val pairs = bandedCosinePairs(s, dir, 0.4)
       .select(col("vec_id_a").as("s"), col("vec_id_b").as("t"))
     val edges = pairs.unionAll(pairs.select(col("t").as("s"), col("s").as("t")))
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     val src = edges.groupBy("s").agg(count(lit(1)).as("d"))
       .orderBy(col("d").desc, col("s")).head.getLong(0)
     graft.ops.Bfs.distances(edges, "s", "t", src, 4)
@@ -461,7 +461,7 @@ object DedupSimQueries {
     val pairs = Dedup.embeddingCosineLsh(fam, "embedding", "vec_id", 0.9)
       .select(col("vec_id_a").as("a"), col("vec_id_b").as("b"))
     val sym = pairs.unionAll(pairs.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     val core = sym.groupBy("a").agg(count(lit(1)).as("d"))
       .filter(col("d") >= 3).select(col("a").as("id"))
     val ce = sym
@@ -529,7 +529,7 @@ object DedupSimQueries {
   // three ANN containment audits (LSH, IVF-PQ, PQ) — computed and
   // checkpointed once per (session, dir) instead of once per audit
   // (§5 serve-many).
-  private val mutTruthCache = Memo.frames
+  private val mutTruthCache = new Memo[DataFrame]
 
   private def mutTruthTop5(s: SparkSession, dir: String): DataFrame =
     mutTruthCache(s, dir) {
@@ -538,10 +538,10 @@ object DedupSimQueries {
           e.filter(pmod(col("vec_id"), lit(50)) === 0),
           e, "vec_id", "embedding", 5)
         .filter(col("cosine") >= 0.9)
-        .localCheckpoint(true)
+        .transform(Tables.checkpoint)
     }
 
-  private val bandedPairsCache = Memo.frames
+  private val bandedPairsCache = new Memo[DataFrame]
 
   /** Cosine pair source for the similarity-graph operators —
     * [[graft.ops.Dedup.embeddingCosineLsh]] at (planes=256, bands=64),
@@ -578,18 +578,18 @@ object DedupSimQueries {
       src.filter(col("cosine") >= th)
         .select(col("vec_id_a"), col("vec_id_b"),
           round(col("cosine"), 6).as("cosine"))
-        .localCheckpoint(true)
+        .transform(Tables.checkpoint)
     }
 
   private val bandedBaseThreshold = 0.35
-  private val bandedBaseCache = Memo.frames
+  private val bandedBaseCache = new Memo[DataFrame]
   private def bandedBase(s: SparkSession, dir: String): DataFrame =
     bandedBaseCache(s, dir)(
       Dedup.embeddingCosineLshRaw(Tables.embeddings(s, dir), "embedding",
           "vec_id", bandedBaseThreshold, planes = 256, bands = 64)
-        .localCheckpoint(true))
+        .transform(Tables.checkpoint))
 
-  private val labelsCache = Memo.frames
+  private val labelsCache = new Memo[DataFrame]
 
   /** Near-dup component labels over [[ngramPairs]], run once per
     * (session, dir): the iterative propagation's output is already
@@ -656,7 +656,7 @@ object DedupSimQueries {
     * unpartitioned lag/lead window. Memoized per (session, dir): the
     * rank pipeline runs driver actions at construction, and four
     * queries consume the same planted corpus. */
-  private val paraCorpusCache = Memo.frames
+  private val paraCorpusCache = new Memo[DataFrame]
 
   def withParagraphCorpus(s: SparkSession, dir: String): DataFrame =
     paraCorpusCache(s, dir) {
@@ -664,7 +664,7 @@ object DedupSimQueries {
       val ranked = graft.ops.ChronoSplit
         .withGlobalRank(Tables.documents(s, dir).select("doc_id", "text"),
           "doc_id", "doc_id")
-        .localCheckpoint(true)
+        .transform(Tables.checkpoint)
       val prev = ranked.select((col(rk) + 1).as(rk), col("text").as("lag_text"))
       val next = ranked.select((col(rk) - 1).as(rk), col("text").as("lead_text"))
       val joined = ranked.join(prev, Seq(rk), "left").join(next, Seq(rk), "left")
@@ -679,7 +679,7 @@ object DedupSimQueries {
       // ONCE so the four span/paragraph consumers read the fanned-out
       // corpus instead of re-deriving (and re-shuffling) it.
       Tables.fanOut(joined, Tables.documents(s, dir))
-        .localCheckpoint(true)
+        .transform(Tables.checkpoint)
     }
 
   /** #19e paragraph-level exact dedup: first corpus-wide occurrence of
@@ -701,7 +701,7 @@ object DedupSimQueries {
       minShared = 3, maxGramDf = 1000)
       .orderBy("doc_id_a", "doc_id_b")
 
-  private val spanGramsCache = Memo.frames
+  private val spanGramsCache = new Memo[DataFrame]
 
   /** The span family's content-defined k-gram sample (k=40, md5 prefix
     * "0") over the planted paragraph corpus, materialized once per
@@ -711,7 +711,7 @@ object DedupSimQueries {
     spanGramsCache(s, dir)(
       Dedup.spanGramPositions(withParagraphCorpus(s, dir), "text", "doc_id",
           k = 40, selPrefix = "0")
-        .localCheckpoint(true))
+        .transform(Tables.checkpoint))
 
   /** #19g per-document span-duplication profile over the same planted
     * corpus: middle documents are ~2/3 assembled from paragraphs that
@@ -755,7 +755,7 @@ object DedupSimQueries {
   // (timed as `_mat_ivf_index` in the bench). Same build parameters as
   // the previous per-query ivfTopK calls, so search outputs are
   // unchanged.
-  private val ivfIdxCache = Memo[graft.ops.IvfIndex](i => Seq(i.assigned))
+  private val ivfIdxCache = new Memo[graft.ops.IvfIndex]
 
   private[graft] def embIvfIndex(s: SparkSession, dir: String): graft.ops.IvfIndex =
     ivfIdxCache(s, dir)(
@@ -778,7 +778,7 @@ object DedupSimQueries {
         |                          (a, e) -> a + e * e)))""".stripMargin)
       .as("uv"))
 
-  private val pqCache = Memo[(graft.ops.Pq.PqModel, DataFrame)](p => Seq(p._2))
+  private val pqCache = new Memo[(graft.ops.Pq.PqModel, DataFrame)]
 
   /** Build-once PQ state per (session, dir) over the planted-mutation
     * corpus: codebooks + the encoded corpus, shared by the search
@@ -792,10 +792,10 @@ object DedupSimQueries {
       // k) pads the codebook instead of failing the whole query surface.
       val model = graft.ops.Pq.train(unit, "vec_id", "uv", m = 8, k = 16,
         seed = 7L, padShort = true)
-      (model, graft.ops.Pq.encode(unit, "vec_id", "uv", model).localCheckpoint(true))
+      (model, graft.ops.Pq.encode(unit, "vec_id", "uv", model).transform(Tables.checkpoint))
     }
 
-  private val ivfPqCache = Memo[graft.ops.IvfPqIndex](i => Seq(i.codedCells))
+  private val ivfPqCache = new Memo[graft.ops.IvfPqIndex]
 
   /** Build-once IVF-PQ index per (session, dir), over the
     * planted-mutation corpus (the audit needs known high-cosine pairs). */
@@ -858,7 +858,7 @@ object DedupSimQueries {
         max(array_max(col("codes"))) <= 15).as("codes_in_range"))
   }
 
-  private val lifecycleCache = Memo.frames
+  private val lifecycleCache = new Memo[DataFrame]
 
   /** #24e ANN index lifecycle, driver-hash-checked end to end: build the
     * IVF index on two thirds of the corpus, [[graft.ops.IvfIndex.add]]
@@ -915,7 +915,7 @@ object DedupSimQueries {
     * The oracle unrolls the identical iteration in SQL — seeds, distance
     * formula, FP accumulation order, argmin ties, and the 6-dp centroid
     * rounding all match by construction. */
-  private val kmeansCache = Memo[graft.ops.KMeans.Centroids](_ => Nil)
+  private val kmeansCache = new Memo[graft.ops.KMeans.Centroids]
 
   /** The fitted k=4 / 2-round centroid table, memoized per (session,
     * dir): assignment and silhouette are two consumers of one fit. */
@@ -1103,12 +1103,12 @@ object DedupSimQueries {
     val e = bandedCosinePairs(s, dir, 0.35)
       .select(col("vec_id_a").as("a"), col("vec_id_b").as("b"))
     val sym = e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     val d2 = sym.as("x").join(sym.as("y"), col("x.b") === col("y.a"))
       .select(col("x.a").as("a"), col("y.b").as("b"))
       .filter(col("a") =!= col("b")).distinct()
       .join(sym, Seq("a", "b"), "left_anti")
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     val d3 = d2.as("x").join(sym.as("y"), col("x.b") === col("y.a"))
       .select(col("x.a").as("a"), col("y.b").as("b"))
       .filter(col("a") =!= col("b")).distinct()

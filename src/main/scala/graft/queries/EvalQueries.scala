@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   */
 object EvalQueries {
 
-  private val interactionsCache = Memo.frames
+  private val interactionsCache = new Memo[DataFrame]
 
   /** (custkey, partkey, spend, qty) interaction table. Materialized once
     * PER (session, dir) — previously each calling query re-executed the
@@ -24,7 +24,7 @@ object EvalQueries {
         .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_custkey").as("u"), col("l_partkey").as("i"))
         .agg(sum("l_extendedprice").as("score"), sum("l_quantity").as("qty"))
-        .localCheckpoint(true))
+        .transform(Tables.checkpoint))
 
   /** #15 regression eval: predict l_quantity by the per-part mean quantity;
     * score the predictor with RMSE/MAE/MSE/R². */
@@ -102,7 +102,7 @@ object EvalQueries {
       .join(cellMean, Seq("event_type", "hod"), "left")
       .crossJoin(broadcast(globalMean))
       .withColumn("prediction", coalesce(col("cell_pred"), col("global_pred")))
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     // Exact ntile(10) via ChronoSplit.withNtile — the bucketed-rank
     // integer formula, identical to the oracle's ntile, with no
     // unpartitioned WindowExec over the scored rows (the prior global
@@ -190,7 +190,7 @@ object EvalQueries {
     * as [[evalBrier]], but keeping the rate as the exact integer pair
     * (s_u, n_u) so the float probability is one correctly-rounded
     * division on both engines. */
-  private val purchaseScoredCache = Memo.frames
+  private val purchaseScoredCache = new Memo[DataFrame]
 
   private def purchaseScored(s: SparkSession, dir: String): DataFrame =
     // Memoized + checkpointed per (session, dir): SIX ranking/calibration
@@ -211,7 +211,7 @@ object EvalQueries {
         .withColumn("neg_p", -col("p"))
         .withColumn("p_base", col("s_g") / col("n_g"))
         .select("event_id", "y", "p", "neg_p", "p_base")
-        .localCheckpoint(true)
+        .transform(Tables.checkpoint)
     }
 
   /** #16d average precision (PR-AUC) of the chrono-split purchase

@@ -227,7 +227,7 @@ object OpsQueries {
       .withColumn("n_ws_tokens", TextAnalysis.wsTokenCount(col("text")))
       .withColumn("quality_score", round(TextAnalysis.qualityScore(col("text")), 6))
       .filter(col("n_ws_tokens") >= 30 && col("quality_score") >= 0.65)
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     val evalSet = docs.filter(pmod(col("doc_id"), lit(25)) === 0)
       .select(expr("substring(text, 10, 120)").as("text"))
     Decontaminate.removeContaminated(gated, "text", "doc_id", evalSet, "text", n = 5)
@@ -763,7 +763,7 @@ object OpsQueries {
     // identical counters (integer sums), |vocab|·depth bucket hashes
     // instead of |tokens|·depth.
     val counts = toks.groupBy("t").agg(count(lit(1)).as("n_exact"))
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     val sketch = Sketches.cmSketchWeighted(counts, "t", "n_exact",
       depth = 4, width = 256)
     val top = counts.orderBy(desc("n_exact"), col("t")).limit(50)
@@ -1171,7 +1171,7 @@ object OpsQueries {
       .orderBy("doc_id")
   }
 
-  private val coocCache = Memo.frames
+  private val coocCache = new Memo[DataFrame]
 
   /** The part co-purchase pair list, materialized once per (session,
     * dir): the neighbor table itself, the recommendation-quality audit,
@@ -1181,7 +1181,7 @@ object OpsQueries {
     coocCache(s, dir)(
       graft.ops.Cooccur.pairs(Tables.lineitem(s, dir), "l_orderkey", "l_partkey",
           minCount = 2L)
-        .localCheckpoint(true))
+        .transform(Tables.checkpoint))
 
   /** #13d market-basket co-occurrence ([[graft.ops.Cooccur.pairs]]):
     * parts appearing together in ≥ 2 orders, with lift — the exact
@@ -1845,7 +1845,7 @@ object OpsQueries {
       .agg((count("a_id") + 1).as(outCol))
   }
 
-  private val searchListCache = Memo.frames
+  private val searchListCache = new Memo[DataFrame]
 
   /** Memoized rank-10 retrieval lists for the pinned three-term query
     * ("vector", "key", "dup") shared by the rank-fusion / rank-metric
@@ -1866,7 +1866,7 @@ object OpsQueries {
       val base =
         if (kind == "bm25") TextAnalysis.bm25Search(docs, "text", "doc_id", q, 10)
         else TextAnalysis.tfidfSearch(docs, "text", "doc_id", q, 10)
-      rankTopList(base, "rk").localCheckpoint(true)
+      rankTopList(base, "rk").transform(Tables.checkpoint)
     }
   }
 
@@ -2041,7 +2041,7 @@ object OpsQueries {
       // Each of the three ntile codings makes two passes over its input
       // (quantile probe + bucket aggregate); materialize the per-customer
       // rollup once instead of re-running the orders aggregation ~6×.
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     // Three exact quartile codings via ChronoSplit.withNtile (bucketed
     // ranks + the integer ntile formula) — customers are entity-scale,
     // so none of the three orderings may sort in one task; DESC

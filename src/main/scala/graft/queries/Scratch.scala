@@ -12,11 +12,11 @@ import org.apache.spark.sql.DataFrame
 private[queries] object Scratch {
 
   /** Run `build` against a fresh temp dir, eagerly materialize its
-    * result (localCheckpoint severs the file dependency), delete the
+    * result (the checkpoint severs the file dependency), delete the
     * dir. */
   def cleaned(prefix: String)(build: java.nio.file.Path => DataFrame): DataFrame = {
     val tmp = java.nio.file.Files.createTempDirectory(prefix)
-    try build(tmp).localCheckpoint(true)
+    try graft.Tables.checkpoint(build(tmp))
     finally deleteRecursively(tmp)
   }
 

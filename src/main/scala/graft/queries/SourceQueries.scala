@@ -20,9 +20,9 @@ object SourceQueries {
   private def meta(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir).select("doc_id", "lang", "source", "n_chars")
 
-  private val csvCache = Memo.frames
-  private val jsonlCache = Memo.frames
-  private val orcCache = Memo.frames
+  private val csvCache = new Memo[DataFrame]
+  private val jsonlCache = new Memo[DataFrame]
+  private val orcCache = new Memo[DataFrame]
 
   /** #17c typed ORC: write → `TypedOrc.read[DocMeta]` → original rows
     * (name-matched columns; same memo + scratch hygiene as CSV). */
@@ -33,7 +33,7 @@ object SourceQueries {
       TypedOrc.read[DocMeta](s, tmp.toString).toDF().orderBy("doc_id")
     })
 
-  private val evoCache = Memo.frames
+  private val evoCache = new Memo[DataFrame]
 
   /** #17d schema evolution across snapshot generations: an old
     * snapshot (even ids, three columns) and a new one (odd ids, plus a
@@ -54,7 +54,7 @@ object SourceQueries {
         .orderBy("doc_id")
     })
 
-  private val bucketCache = Memo.frames
+  private val bucketCache = new Memo[DataFrame]
 
   /** #17e bucketed co-located join ([[graft.sources.Bucketed]]): orders
     * and lineitem bucketed (and per-bucket sorted) by order key into the
@@ -90,7 +90,7 @@ object SourceQueries {
       out
     }
 
-  private val partCache = Memo.frames
+  private val partCache = new Memo[DataFrame]
 
   /** #17f partition-pruned scan: events written `partitionBy(day)`, read
     * back with a literal 7-day filter — the layout that turns a
@@ -142,7 +142,7 @@ object SourceQueries {
         .orderBy("doc_id")
     })
 
-  private val textCache = Memo.frames
+  private val textCache = new Memo[DataFrame]
 
   /** #17g line-text roundtrip: documents serialized as
     * `doc_id<TAB>newline-collapsed-text` lines through
@@ -162,7 +162,7 @@ object SourceQueries {
         .orderBy("doc_id")
     })
 
-  private val fwCache = Memo.frames
+  private val fwCache = new Memo[DataFrame]
 
   /** #17h fixed-width (copybook-style) ingestion roundtrip
     * ([[graft.sources.FixedWidth]]): events written as 44-char
@@ -184,7 +184,7 @@ object SourceQueries {
       FixedWidth.read(s, tmp.toString, layout).orderBy("event_id")
     })
 
-  private val gzCache = Memo.frames
+  private val gzCache = new Memo[DataFrame]
 
   /** #17i gzip-compressed text ingestion roundtrip: the same tab-keyed
     * line corpus as [[textRoundtrip]] but written through the gzip
@@ -207,7 +207,7 @@ object SourceQueries {
         .orderBy("doc_id")
     })
 
-  private val sizingCache = Memo.frames
+  private val sizingCache = new Memo[DataFrame]
 
   /** #52' output-sizing audit, sql-decidable: [[graft.sources.CorpusWriter]]'s
     * two writers exercised against the lake and read back through
@@ -237,7 +237,7 @@ object SourceQueries {
       sized.unionAll(parted).orderBy("metric")
     })
 
-  private val binfCache = Memo.frames
+  private val binfCache = new Memo[DataFrame]
 
   /** #17h opaque-blob ingestion via Spark's `binaryFile` source — the
     * path every non-splittable media/artifact lake uses: one file per
@@ -308,7 +308,7 @@ object SourceQueries {
       .orderBy("day_num")
   }
 
-  private val dppCache = Memo.frames
+  private val dppCache = new Memo[DataFrame]
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dpp_scan"        -> (dppScan _),

@@ -121,14 +121,14 @@ object StatQueries {
     // tiny relative to the input, so the eager checkpoint is cheap at any
     // scale; 4 rounds and the emitted values are unchanged.
     var sym = p.unionAll(p.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     for (_ <- 1 to 4) {
       val keep = sym.groupBy("a").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= 2).select("a")
       sym = sym
         .join(keep, Seq("a"), "left_semi")
         .join(keep.select(col("a").as("b")), Seq("b"), "left_semi")
-        .localCheckpoint(true)
+        .transform(Tables.checkpoint)
     }
     sym.groupBy(col("a").as("item"))
       .agg(count(lit(1)).as("deg"))
@@ -561,7 +561,7 @@ object StatQueries {
   def graphRichclub(s: SparkSession, dir: String): DataFrame = {
     val p = OpsQueries.coocPairs(s, dir)
       .select(col("item_a").as("a"), col("item_b").as("b"))
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     val sym = p.unionAll(p.select(col("b").as("a"), col("a").as("b")))
     val deg = sym.groupBy("a").agg(count(lit(1)).as("deg"))
     val degB = deg.select(col("a").as("b"), col("deg").as("deg_b"))
@@ -710,7 +710,7 @@ object StatQueries {
     val p = OpsQueries.coocPairs(s, dir)
       .select(col("item_a").as("s"), col("item_b").as("t"))
     val edges = p.unionAll(p.select(col("t").as("s"), col("s").as("t")))
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     val startRow = edges.agg(min("s")).head
     if (startRow.isNullAt(0)) {
       // No edges at all (degenerate corpus): empty result, same schema.
@@ -1337,7 +1337,7 @@ object StatQueries {
       // Referenced by all five half-steps of the unrolled HITS chain —
       // materialize the deduped edge list once instead of re-running the
       // distinct per reference.
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     val a1 = b.groupBy("item").agg(count(lit(1)).as("a"))
     val h1 = b.join(a1, "item").groupBy("basket").agg(sum("a").as("h"))
     val a2 = b.join(h1, "basket").groupBy("item").agg(sum("h").as("a"))
@@ -1837,7 +1837,7 @@ object StatQueries {
           .cast("long"))
       .groupBy(col("l_suppkey").as("s_suppkey"))
       .agg(sum("cents").as("c"))
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     val mx = rev.agg(max("c").as("mxc"))
     rev.crossJoin(broadcast(mx))
       .filter(col("c") === col("mxc"))
@@ -2018,7 +2018,7 @@ object StatQueries {
       .withColumn("mx", max("rn").over(wSess))
     val kept = rn
       .filter(col("rn") <= coalesce(col("pp"), col("mx")))
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     val w3 = Window.partitionBy("user_id", "session_idx").orderBy("rn")
     val stepped = kept.withColumn("prev", lag("event_type", 1).over(w3))
     val e1 = stepped.select(
@@ -2033,7 +2033,7 @@ object StatQueries {
     val configs = ev.filter(col("event_type") =!= "purchase")
       .select(col("event_type").as("cfg")).distinct()
       .unionAll(s.range(1).select(lit("none").as("cfg")))
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     // Removed channel: transitions into it redirect to __null (its own
     // outgoing rows drop — the state is unreachable).
     val ctrans = probs.crossJoin(broadcast(configs))
@@ -2041,7 +2041,7 @@ object StatQueries {
       .withColumn("t2", when(col("t") === col("cfg"), "__null").otherwise(col("t")))
       .groupBy(col("cfg"), col("s"), col("t2").as("t"))
       .agg(sum("p").as("p"))
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     val conv = configs.select(col("cfg").as("vcfg"),
       lit("__conv").as("st"), lit(1.0).as("v"))
     var v = conv
@@ -2059,7 +2059,7 @@ object StatQueries {
       v = step.unionAll(conv)
       // Every 4th step: sever the lineage so the plan depth stays flat
       // (tiny frames — the checkpoint is metadata-cheap).
-      if (i % 4 == 0) v = v.localCheckpoint(true)
+      if (i % 4 == 0) v = Tables.checkpoint(v)
     }
     val pstart = v.filter(col("st") === "__start")
       .select(col("vcfg").as("cfg"), col("v").as("p_conv"))
@@ -3802,8 +3802,8 @@ object StatQueries {
     val pr = OpsQueries.coocPairs(s, dir)
       .select(col("item_a").as("sv"), col("item_b").as("tv"))
     val e = pr.unionAll(pr.select(col("tv").as("sv"), col("sv").as("tv")))
-      .localCheckpoint(true)
-    val deg = e.groupBy("sv").agg(count(lit(1)).as("d")).localCheckpoint(true)
+      .transform(Tables.checkpoint)
+    val deg = e.groupBy("sv").agg(count(lit(1)).as("d")).transform(Tables.checkpoint)
     val seedRow = e.agg(min("sv")).head
     if (seedRow.isNullAt(0)) {
       return s.range(0).select(col("id").as("item"),
@@ -3834,7 +3834,7 @@ object StatQueries {
         .unionAll(e.sparkSession.range(1)
           .select(lit(seed).as("v"), lit(150000000000L).as("pp")))
         .groupBy("v").agg(sum("pp").as("pp"))
-        .localCheckpoint(true)
+        .transform(Tables.checkpoint)
     }
     p.orderBy(col("pp").desc, col("v"))
       .limit(20)
@@ -3997,7 +3997,7 @@ object StatQueries {
   private def rakedWeights(s: SparkSession, dir: String): DataFrame = {
     val cells = Tables.documents(s, dir)
       .groupBy("lang", "source").agg(count(lit(1)).as("o"))
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     val tot = cells.agg(sum("o").as("n"), countDistinct("lang").as("kl"))
     // Step 0 lifts counts onto the nano grid.
     var w = cells.crossJoin(broadcast(tot))
@@ -4019,7 +4019,7 @@ object StatQueries {
       })
         .select(col("lang"), col("source"), col("o"), col("w2").as("w"),
           col("n"), col("kl"))
-        .localCheckpoint(true)
+        .transform(Tables.checkpoint)
     }
     w
   }
@@ -4080,10 +4080,10 @@ object StatQueries {
             round(cast(dev as double)/m
             / sqrt(cast(cast(m as decimal(38,0))*srr - cast(sr as decimal(38,0))*sr as double)
               /m/(m - 1)), 6) end""").as("g_stat"))
-        .localCheckpoint(true)
+        .transform(Tables.checkpoint)
       rem = rem.join(pick.select(col("event_type").as("pe"), col("hour_us").as("ph")),
           col("event_type") === col("pe") && col("hour_us") === col("ph"), "left_anti")
-        .localCheckpoint(true)
+        .transform(Tables.checkpoint)
       pick
     }
     picks.reduce(_ unionAll _).orderBy("event_type", "esd_round")
@@ -4454,13 +4454,13 @@ object StatQueries {
   def graphKtruss(s: SparkSession, dir: String): DataFrame = {
     var e = OpsQueries.coocPairs(s, dir)
       .select(col("item_a").as("a"), col("item_b").as("b"))
-      .localCheckpoint(true)
+      .transform(Tables.checkpoint)
     for (_ <- 1 to 3) {
       val sup = edgeSupports(e)
       e = e.join(sup, e("a") === sup("s") && e("b") === sup("t"))
         .filter(col("sup") >= 1)
         .select(e("a"), e("b"))
-        .localCheckpoint(true)
+        .transform(Tables.checkpoint)
     }
     val fin = edgeSupports(e)
     e.join(fin, e("a") === fin("s") && e("b") === fin("t"), "left")

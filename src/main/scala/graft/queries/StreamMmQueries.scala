@@ -281,7 +281,7 @@ object StreamMmQueries {
     EventStream.runSlidingBatchEquivalent(s, dir)
       .orderBy("window_start", "event_type")
 
-  private val ckptCache = Memo.frames
+  private val ckptCache = new Memo[DataFrame]
 
   /** #29g checkpointed incremental ingest, sql-decidable: the same
     * file-stream source is drained TWICE against ONE checkpoint

@@ -179,7 +179,7 @@ object EventStream {
       "complete", "graft_sdrift")
       // The sink view joins against its own aggregate below; break the
       // view lineage so the self-reference gets fresh attribute ids.
-      .localCheckpoint(true)
+      .transform(graft.Tables.checkpoint)
     val totals = counts.groupBy("window_start").agg(sum("cnt").as("n_events"))
     val grid = totals.select(col("window_start"), col("n_events"),
       explode(sequence(lit(0L), lit(9L))).as("bin"))

@@ -7,7 +7,8 @@ import org.apache.spark.sql.DataFrame
 
 /** The blocked fit: equal to a dense single-machine fit under any block
   * geometry, bitwise reproducible, safe to run concurrently on one
-  * session, and leaving nothing persisted but the model's tables. */
+  * session, and leaving nothing persisted but the model's tables, which
+  * `release` frees. */
 class BlockedFitSpec extends SparkSpec {
   import spark.implicits._
 
@@ -123,7 +124,25 @@ class BlockedFitSpec extends SparkSpec {
         .setNumBlocks(2).setMaxIter(3).setCheckpointInterval(interval))
       val added = sc.getPersistentRDDs.keySet -- before
       assert(added == model.factors.map(checkpointId).toSet, s"checkpoint interval $interval")
-      model.factors.foreach(f => sc.getPersistentRDDs(checkpointId(f)).unpersist(false))
+      model.release()
+      assert((sc.getPersistentRDDs.keySet -- before).isEmpty, s"checkpoint interval $interval")
     }
+  }
+
+  test("a fit that throws after checkpointing factor tables leaves nothing persisted") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // One iteration solves user, item, then tag, checkpointing each table.
+    // A NaN item–tag rating gives its item a NaN factor; that factor fills
+    // its tags' Grams with NaN, so the tag solve throws after the user and
+    // item tables exist.
+    val (i, t, _) = itemTag.head
+    val poisoned = (itemTag.tail :+ ((i, t, Float.NaN))).toDF("item", "tag", "rating")
+    val e = intercept[Exception] {
+      estimator(implicitPrefs = false, nonnegative = false).setNumBlocks(2).setMaxIter(1)
+        .fit(("user", "item") -> userItem.toDF("user", "item", "rating"), ("item", "tag") -> poisoned)
+    }
+    assert(e.getMessage.contains("not positive definite"), e.getMessage)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
 }

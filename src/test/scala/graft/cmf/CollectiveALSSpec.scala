@@ -281,6 +281,25 @@ class CollectiveALSSpec extends SparkSpec {
     assert(got == want)
   }
 
+  test("release frees a fitted model's factor checkpoints and is a no-op on a loaded model") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val model = new CollectiveALS()
+      .setRank(4).setMaxIter(2).setRegParam(0.1).setSeed(7L)
+      .fit(ratings)
+    val held = model.factors.flatMap(graft.Tables.checkpoints).map(_.id).toSet
+    assert(held.size == 2 && held.subsetOf(sc.getPersistentRDDs.keySet))
+    val dir = java.nio.file.Files.createTempDirectory("graft_model").toString
+    model.save(dir)
+    val loaded = CollectiveALSModel.load(spark, dir)
+    val persisted = sc.getPersistentRDDs.keySet
+    loaded.release()
+    assert(sc.getPersistentRDDs.keySet == persisted)
+    assert(loaded.predict(ratings).count() == ratings.count())
+    model.release()
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
   test("model entity-column mutators rename the predict join keys") {
     val model = new CollectiveALS()
       .setRank(4).setMaxIter(2).setRegParam(0.1).setSeed(7L)

@@ -197,6 +197,16 @@ class NearDupSpec extends SparkSpec {
     assert(got.forall(_._2 == 0L), s"non-root labels: ${got.filter(_._2 != 0L).take(5).toSeq}")
   }
 
+  test("clusters leaves only the returned frame's checkpoint persisted") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val pairs = (0 until 60).map(i => (i.toLong, i + 1L)).toDF("a", "b")
+    val before = sc.getPersistentRDDs.keySet
+    val got = Dedup.clusters(pairs, "a", "b")
+    assert(sc.getPersistentRDDs.keySet -- before == Tables.checkpoints(got).map(_.id).toSet)
+    Tables.release(got)
+  }
+
   test("paragraphDedup elects first (id,pos) occurrence; full-dup doc vanishes") {
     import spark.implicits._
     val docs = Seq(

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkEntry, SparkSpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The query layer's one memo: a (session, key) builds once under
@@ -29,7 +29,7 @@ class MemoSpec extends SparkSpec {
 
   test("concurrent first calls build once and share one value") {
     val s = fresh()
-    val memo = Memo.frames
+    val memo = new Memo[DataFrame]
     val builds = new AtomicInteger
     val entered = new CountDownLatch(1)
     val proceed = new CountDownLatch(1)
@@ -62,8 +62,8 @@ class MemoSpec extends SparkSpec {
 
   test("a build may call other memos; each builds once, and a failed build is retried") {
     val s = fresh()
-    val inner = Memo.frames
-    val outer = Memo.frames
+    val inner = new Memo[DataFrame]
+    val outer = new Memo[DataFrame]
     val (innerBuilds, outerBuilds) = (new AtomicInteger, new AtomicInteger)
     def innerFrame = inner(s, "k") { innerBuilds.incrementAndGet(); s.range(2).toDF() }
     def outerFrame = outer(s, "k") { outerBuilds.incrementAndGet(); innerFrame.union(innerFrame) }
@@ -71,7 +71,7 @@ class MemoSpec extends SparkSpec {
     assert(innerFrame.count() == 2 && outerFrame.count() == 4)
     assert(innerBuilds.get == 1 && outerBuilds.get == 1)
 
-    val flaky = Memo.frames
+    val flaky = new Memo[DataFrame]
     val attempts = new AtomicInteger
     def flakyFrame = flaky(s, "k") {
       if (attempts.incrementAndGet() == 1) throw new IllegalStateException("first build fails")
@@ -85,11 +85,11 @@ class MemoSpec extends SparkSpec {
 
   test("one key on two sessions builds twice; releasing one leaves the other's checkpoint") {
     val (s1, s2) = (fresh(), fresh())
-    val memo = Memo.frames
+    val memo = new Memo[DataFrame]
     val builds = new AtomicInteger
     def frame(s: SparkSession) = memo(s, "k") {
       builds.incrementAndGet()
-      s.range(5).toDF().localCheckpoint(true)
+      Tables.checkpoint(s.range(5).toDF())
     }
     val (a, b) = (frame(s1), frame(s2))
     assert(builds.get == 2)
@@ -133,6 +133,20 @@ class MemoSpec extends SparkSpec {
     assert((persisted -- before).isEmpty)
   }
 
+  test("release leaves nothing persisted after building every entry on one session") {
+    val s = fresh()
+    val before = persisted
+    val added = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val start = persisted
+      fn(s, dir)
+      name -> (persisted -- start)
+    }
+    Memo.release(s)
+    val left = persisted -- before
+    val holders = added.collect { case (name, ids) if (ids & left).nonEmpty => s"$name (${(ids & left).size})" }
+    assert(left.isEmpty, s"${left.size} RDDs still persisted, added by: ${holders.mkString(", ")}")
+  }
+
   test("no file under src/main/scala/graft/queries hand-rolls a memo") {
     val offenders = Files.walk(Paths.get("src/main/scala/graft/queries")).iterator.asScala
       .filter(_.toString.endsWith(".scala"))
@@ -141,6 +155,14 @@ class MemoSpec extends SparkSpec {
         src.contains("TrieMap") || src.contains("getOrElseUpdate")
       }
       .map(_.getFileName.toString).toSet
+    assert(offenders.isEmpty)
+  }
+
+  test("no file under src/main checkpoints a frame except through Tables.checkpoint") {
+    val offenders = Files.walk(Paths.get("src/main")).iterator.asScala
+      .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != "Tables.scala")
+      .filter(f => Files.readString(f).contains(".localCheckpoint(true"))
+      .map(_.toString).toSet
     assert(offenders.isEmpty)
   }
 }
