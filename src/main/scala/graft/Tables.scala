@@ -115,12 +115,25 @@ object Tables {
     * materializes a frame. The checkpoint RDD's id is recorded under
     * `df.sparkSession`, so [[releaseSession]] can free it even when no
     * frame that reads it is left to hand to [[release]]. Only the id is
-    * kept: an unreachable checkpoint still goes to the ContextCleaner. */
+    * kept: an unreachable checkpoint still goes to the ContextCleaner.
+    *
+    * Spark persists the checkpoint RDD before its job runs, so the frame is
+    * checkpointed lazily and then materialized by one job here (the job the
+    * eager form runs): if that job throws, the RDD is unpersisted before the
+    * error propagates instead of staying persisted with no frame to release
+    * it through. */
   def checkpoint(df: DataFrame): DataFrame = checkpoint(df, StorageLevel.MEMORY_AND_DISK)
 
   def checkpoint(df: DataFrame, level: StorageLevel): DataFrame = {
-    val c = df.localCheckpoint(true, level)
-    made.synchronized(made.computeIfAbsent(df.sparkSession, _ => mutable.Set.empty[Int]) ++= checkpoints(c).map(_.id))
+    val c = df.localCheckpoint(false, level)
+    val rdds = checkpoints(c)
+    made.synchronized(made.computeIfAbsent(df.sparkSession, _ => mutable.Set.empty[Int]) ++= rdds.map(_.id))
+    try rdds.foreach(_.count())
+    catch {
+      case e: Throwable =>
+        rdds.foreach(_.unpersist(blocking = false))
+        throw e
+    }
     c
   }
 

@@ -2,7 +2,7 @@ package graft.cmf
 
 import scala.collection.mutable
 
-import org.apache.spark.{HashPartitioner, SparkContext}
+import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -141,10 +141,8 @@ class CollectiveALS(entityNames: String*) extends Serializable {
     }.toArray
     // Every RDD the fit persists (rating blocks, in-loop factor blocks) is
     // released here whether the fit returns or throws; a failed fit also
-    // releases the model tables it had already checkpointed, and the one
-    // whose checkpoint job failed: Spark persists a checkpoint's RDD before
-    // its job runs and returns no frame to release it through, so it is
-    // found as a persisted RDD that reads what the fit holds.
+    // releases the model tables it had already checkpointed (a table whose
+    // checkpoint job fails is released by `Tables.checkpoint` itself).
     val held = mutable.ArrayBuffer.empty[RDD[_]]
     val tables = mutable.ArrayBuffer.empty[DataFrame]
     var done = false
@@ -153,10 +151,7 @@ class CollectiveALS(entityNames: String*) extends Serializable {
       done = true
       model
     } finally {
-      if (!done) {
-        tables.foreach(graft.Tables.release)
-        readersOf(spark.sparkContext, held.map(_.id).toSet).foreach(_.unpersist(false))
-      }
+      if (!done) tables.foreach(graft.Tables.release)
       held.foreach(_.unpersist(false))
     }
   }
@@ -279,11 +274,12 @@ class CollectiveALS(entityNames: String*) extends Serializable {
       factors(e) = solved
     }
     if (maxIter == 0) cols.indices.foreach(e => tables += table(spark, layout(e), factors(e), k))
-    new CollectiveALSModel(rank, tables.toIndexedSeq, cols.toIndexedSeq, predictionCol)
+    new CollectiveALSModel(rank, tables.toIndexedSeq, cols.toIndexedSeq, predictionCol, fitBlocks = true)
   }
 
   /** One entity's (id, features) table, eagerly checkpointed at
-    * [[finalStorageLevel]]. */
+    * [[finalStorageLevel]]: partition b is block b, ids ascending, which
+    * [[CollectiveALSModel.predict]] relies on. */
   private def table(spark: SparkSession, layout: RDD[Block], f: RDD[Array[Float]], k: Int): DataFrame = {
     import spark.implicits._
     graft.Tables.checkpoint(layout.zipPartitions(f) { (bi, fi) =>
@@ -302,20 +298,6 @@ object CollectiveALS {
 
   /** The block of `id` among `n` blocks of its entity. */
   private[cmf] def blockOf(id: Long, n: Int): Int = java.lang.Math.floorMod(java.lang.Long.hashCode(id), n)
-
-  /** The persisted RDDs, other than `ids` and newer than all of them, whose
-    * lineage reads one of `ids`. */
-  private def readersOf(sc: SparkContext, ids: Set[Int]): Iterable[RDD[_]] = {
-    val reads = mutable.Map.empty[Int, Boolean]
-    def walk(r: RDD[_]): Boolean = reads.get(r.id) match {
-      case Some(b) => b
-      case None =>
-        val b = r.dependencies.exists(d => ids(d.rdd.id) || walk(d.rdd))
-        reads(r.id) = b
-        b
-    }
-    if (ids.isEmpty) Nil else sc.getPersistentRDDs.values.filter(r => r.id > ids.max && walk(r))
-  }
 
   /** Rating rows bound for one block, columnar: `side`, `dst` (an id of the
     * block's entity), `src` (an id of the other entity), `rating`. */

@@ -11,9 +11,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * The composable alternative — `aggregate(zip_with(a, b, _*_), 0d, _+_)`
   * — is also codegen'd but materializes the intermediate product array
   * and walks lambda-bound variables per element; this expression is one
-  * fused primitive loop, which matters on the model-serving hot paths
-  * (`CollectiveALSModel.predict`, ANN re-rank) where it runs per
-  * (row × rank).
+  * fused primitive loop, which matters on hot paths such as the ANN
+  * re-rank, where it runs per (row × rank). `CollectiveALSModel` scores
+  * with the same loop outside Catalyst.
   *
   * Null semantics: null if either array is null (standard binary null
   * propagation); null *elements* contribute 0 (treated as missing).

@@ -96,9 +96,11 @@ object CmfQueries {
         .setRank(8).setMaxIter(3).setRegParam(0.1).setAlpha(1.0)
         .setImplicitPrefs(true).setSeed(42L)
         .fit(ratings)
-      model.predict(ratings)
+      val out = model.predict(ratings)
         .select(col("cust"), col("part"), col("prediction"))
         .transform(Tables.checkpoint)
+      model.release()
+      out
     }
 
   /** #9b implicit predict coverage shape — same invariants as
@@ -124,9 +126,11 @@ object CmfQueries {
       val model = new CollectiveALS("cust", "part")
         .setRank(8).setMaxIter(3).setRegParam(0.1).setNonnegative(true).setSeed(42L)
         .fit(ratings)
-      model.predict(ratings)
+      val out = model.predict(ratings)
         .select(col("cust"), col("part"), col("prediction"))
         .transform(Tables.checkpoint)
+      model.release()
+      out
     }
 
   /** #11b nonnegative predict shape, sql-decidable without factor
@@ -161,7 +165,9 @@ object CmfQueries {
       val p2 = model.predict(r2, "part", "supp")
         .select(lit("part_supp").as("relation"),
           col("part").as("left_id"), col("supp").as("right_id"), col("prediction"))
-      p1.unionAll(p2).transform(Tables.checkpoint)
+      val out = p1.unionAll(p2).transform(Tables.checkpoint)
+      model.release()
+      out
     }
 
   /** #10c collective predict coverage shape, sql-decidable: per
@@ -214,7 +220,9 @@ object CmfQueries {
           col("part").as("left_id"), col("supp").as("right_id"), col("prediction"))
       // Materialized once per (session, dir): the #10b predict query and
       // its #10c' shape audit read one implicit fit, not two.
-      p1.unionAll(p2).transform(Tables.checkpoint)
+      val out = p1.unionAll(p2).transform(Tables.checkpoint)
+      model.release()
+      out
     }
 
   /** #13: blocked top-k recommendation for a deterministic 1-in-20 user
@@ -385,6 +393,7 @@ object CmfQueries {
 
       val predTrain = model.predict(train.select("cust", "part", "rating"))
         .transform(Tables.checkpoint)
+      model.release()
       val evTrain = RegressionEvaluation
         .evaluate(predTrain, "rating", "prediction").head()
       val sdTrain = tstats.getDouble(1)

@@ -17,6 +17,15 @@ object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     Dataset.ofRows(spark.asInstanceOf[ClassicSession], plan)
 
+  /** A DataFrame over rows already in Catalyst's internal form (the
+    * `private[sql]` `internalCreateDataFrame`): no per-row conversion
+    * from external `Row`s. */
+  def internalCreateDataFrame(
+      spark: SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[ClassicSession].internalCreateDataFrame(rows, schema)
+
   /** Public `Column` over a custom catalyst `Expression` — for graft
     * expressions carrying non-expression parameters (e.g.
     * [[graft.functions.BucketIndex]]'s cut array) that the function

@@ -147,6 +147,32 @@ class MemoSpec extends SparkSpec {
     assert(left.isEmpty, s"${left.size} RDDs still persisted, added by: ${holders.mkString(", ")}")
   }
 
+  test("a checkpoint runs one job, and one whose job throws leaves nothing persisted") {
+    import org.apache.spark.graftshim.JobCount
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val s = fresh()
+    val before = persisted
+    val (ok, jobs) = JobCount(s.sparkContext)(Tables.checkpoint(s.range(10).toDF()))
+    assert(jobs == 1)
+    assert(checkpointIds(ok).size == 1 && checkpointIds(ok).subsetOf(persisted))
+    Tables.release(ok)
+    val failing = s.range(100).select(when(col("id") === 42, raise_error(lit("boom"))).otherwise(col("id")).as("id"))
+    val e = intercept[Exception](Tables.checkpoint(failing))
+    assert(e.getMessage.contains("boom"), e.getMessage)
+    assert(persisted == before)
+    Memo.release(s)
+  }
+
+  test("an entry that fits a model it does not keep releases the model's factor tables") {
+    val s = fresh()
+    val before = persisted
+    val outs = Seq(CmfQueries.alsImplicit _, CmfQueries.alsNonnegative _,
+      CmfQueries.cmfFitPredict _, CmfQueries.cmfImplicit _).map(_(s, dir))
+    val inputs = Seq(CmfQueries.custPartRatings(s, dir), CmfQueries.partSuppPairs(s, dir))
+    assert(persisted -- before == (outs ++ inputs).flatMap(checkpointIds).toSet)
+    Memo.release(s)
+  }
+
   test("no file under src/main/scala/graft/queries hand-rolls a memo") {
     val offenders = Files.walk(Paths.get("src/main/scala/graft/queries")).iterator.asScala
       .filter(_.toString.endsWith(".scala"))
