@@ -31,7 +31,9 @@ import org.apache.spark.storage.StorageLevel
   *    one destination at a time in O(k²) memory, and solves it
   *    ([[CholeskySolver]] / [[NnlsSolver]]). Normal equations never cross
   *    the wire: the half-step shuffles only factors, which is the ALS
-  *    communication lower bound;
+  *    communication lower bound. The same half-step ([[CollectiveALS.halfStep]]
+  *    over [[CollectiveALS.ratingBlocks]]) serves
+  *    [[CollectiveALSModel.foldIn]], with the source factors frozen;
   *  - the block counts are explicit partitioners, so a fit never touches
   *    the session conf and concurrent fits on one session need no lock;
   *  - the fixed summation order (sorted in-blocks, per-block Gram partials
@@ -164,14 +166,8 @@ class CollectiveALS(entityNames: String*) extends Serializable {
       tables: mutable.Buffer[DataFrame]): CollectiveALSModel = {
     val sc = spark.sparkContext
     val k = rank
-    val rels = datasets.map { case ((l, r), _) => (cols.indexOf(l), cols.indexOf(r)) }.toArray
-    // Side 2i is relation i seen from its left entity (dst = left id,
-    // src = right id); side 2i+1 from its right entity.
-    val sideDst = Array.tabulate(2 * rels.length)(s => if (s % 2 == 0) rels(s / 2)._1 else rels(s / 2)._2)
-    val sideSrc = Array.tabulate(2 * rels.length)(s => if (s % 2 == 0) rels(s / 2)._2 else rels(s / 2)._1)
-    cols.indices.foreach(e => require(sideDst.contains(e), s"entity ${cols(e)} appears in no relation"))
-    val offsets = blocks.scanLeft(0)(_ + _) // entity e owns partitions [offsets(e), offsets(e + 1))
-    val srcBlocks = sideSrc.map(blocks)
+    val g = new Geometry(datasets.map { case ((l, r), _) => (cols.indexOf(l), cols.indexOf(r)) }.toArray, blocks)
+    cols.indices.foreach(e => require(g.sideDst.contains(e), s"entity ${cols(e)} appears in no relation"))
 
     // Rating blocks: one shuffle of every relation's rows into the blocks
     // of both of its entities.
@@ -179,25 +175,16 @@ class CollectiveALS(entityNames: String*) extends Serializable {
     val nullIds = datasets.map(_ => sc.longAccumulator)
     val chunks = datasets.zipWithIndex.map { case (((l, r), df), i) =>
       val rows = df.select(col(l).cast("long"), col(r).cast("long"), ratingExpr).rdd
-      val (li, ri) = rels(i)
-      val (ln, rn, lo, ro) = (blocks(li), blocks(ri), offsets(li), offsets(ri))
       val nulls = nullIds(i)
-      val total = offsets.last
       rows.mapPartitions { it =>
-        val out = new ChunkBuffers(total)
+        val out = new ChunkBuffers(g)
         it.flatMap { row =>
           if (row.isNullAt(0) || row.isNullAt(1)) { nulls.add(1L); Iterator.empty }
-          else {
-            val (lid, rid, v) = (row.getLong(0), row.getLong(1), row.getFloat(2))
-            out.add(lo + blockOf(lid, ln), 2 * i, lid, rid, v) ++
-              out.add(ro + blockOf(rid, rn), 2 * i + 1, rid, lid, v)
-          }
+          else out.add(i, row.getLong(0), row.getLong(1), row.getFloat(2))
         } ++ out.flush()
       }
     }
-    val all = sc.union(chunks).partitionBy(new HashPartitioner(offsets.last))
-      .mapPartitions(it => Iterator.single(Block.build(it.map(_._2), srcBlocks)))
-      .persist(intermediateStorageLevel)
+    val all = ratingBlocks(g, chunks).persist(intermediateStorageLevel)
     held += all
     all.count()
     // Checked id cast: a non-numeric id casts to null, which must fail the
@@ -207,9 +194,7 @@ class CollectiveALS(entityNames: String*) extends Serializable {
       require(n.value == 0L,
         s"relation ($l, $r): entity ids must be numeric (cast to long produced null)")
     }
-    val layout: Array[RDD[Block]] = cols.indices.map { e =>
-      PartitionPruningRDD.create(all, p => p >= offsets(e) && p < offsets(e + 1)): RDD[Block]
-    }.toArray
+    val layout: Array[RDD[Block]] = cols.indices.map(g.layout(all, _)).toArray
 
     // Deterministic per-id init (abs-Gaussian, unit norm), computed from the
     // blocks' ids wherever it is read.
@@ -226,39 +211,9 @@ class CollectiveALS(entityNames: String*) extends Serializable {
       }
     }.toArray
 
-    val (nn, reg, implicitP, a) = (nonnegative, regParam, implicitPrefs, alpha)
+    val rules = Rules(k, regParam, implicitPrefs, alpha, nonnegative)
     for (iter <- 0 until maxIter; e <- cols.indices) {
-      val sides = sideDst.indices.filter(sideDst(_) == e)
-      // Implicit prefs: per incident relation, the YtY Gram of the source
-      // factors that relation observes (the reference's per-relation
-      // srcFactorBlock) — one job, block partials summed in block order.
-      val yty: Array[Array[Double]] =
-        if (!implicitP) Array.empty
-        else {
-          val gramSides = sides.map(_ / 2).distinct
-            .map(rel => if (rels(rel)._1 == e) 2 * rel else 2 * rel + 1)
-          val partials = sc.union(gramSides.map { s =>
-            layout(sideSrc(s)).zipPartitions(factors(sideSrc(s))) { (bi, fi) =>
-              Iterator.single((s / 2, bi.next().gram(s, fi.next(), k)))
-            }
-          }).collect()
-          val out = new Array[Array[Double]](rels.length)
-          partials.foreach { case (rel, g) =>
-            if (out(rel) == null) out(rel) = g
-            else { var i = 0; while (i < g.length) { out(rel)(i) += g(i); i += 1 } }
-          }
-          out
-        }
-      val ytyB = sc.broadcast(yty)
-      val sent = sc.union(sides.map { s =>
-        layout(sideSrc(s)).zipPartitions(factors(sideSrc(s))) { (bi, fi) =>
-          bi.next().send(s, fi.next(), k)
-        }
-      }).partitionBy(new HashPartitioner(blocks(e)))
-      val solved = layout(e).zipPartitions(sent) { (bi, mi) =>
-        val solver: LeastSquaresSolver = if (nn) new NnlsSolver(k) else new CholeskySolver(k)
-        Iterator.single(bi.next().solve(mi, k, solver, reg, implicitP, a, ytyB.value))
-      }.persist(intermediateStorageLevel)
+      val solved = halfStep(g, layout, factors, e, rules).persist(intermediateStorageLevel)
       held += solved
       // Lineage policy (reference: setCheckpointInterval /
       // set{Intermediate,Final}StorageLevel): the last iteration's factors
@@ -307,9 +262,27 @@ object CollectiveALS {
       val src: Array[Long],
       val rating: Array[Float]) extends Serializable
 
-  /** Map-side buffers, one per target partition, each flushed as a
-    * [[Chunk]] every [[ChunkRows]] rows. */
-  private final class ChunkBuffers(total: Int) {
+  /** Relation i joins entities `rels(i)`; side 2i is relation i seen from
+    * its left entity (dst = left id, src = right id), side 2i + 1 from its
+    * right entity. Entity e has `blocks(e)` blocks, at partitions
+    * [offsets(e), offsets(e + 1)) of the rating blocks. */
+  private[cmf] final class Geometry(val rels: Array[(Int, Int)], val blocks: Array[Int]) extends Serializable {
+    val offsets: Array[Int] = blocks.scanLeft(0)(_ + _)
+    val sideDst: Array[Int] = Array.tabulate(2 * rels.length)(s => if (s % 2 == 0) rels(s / 2)._1 else rels(s / 2)._2)
+    val sideSrc: Array[Int] = Array.tabulate(2 * rels.length)(s => sideDst(s ^ 1))
+
+    /** Entity e's blocks of the rating blocks `all`, block b at partition b. */
+    def layout(all: RDD[Block], e: Int): RDD[Block] =
+      PartitionPruningRDD.create(all, p => p >= offsets(e) && p < offsets(e + 1))
+  }
+
+  /** A half-step's rules: rank `k`, λ = `reg` × each id's rating count,
+    * Hu-Koren preferences with confidence `alpha`, and NNLS. */
+  private[cmf] final case class Rules(k: Int, reg: Double, implicitPrefs: Boolean, alpha: Double, nonnegative: Boolean)
+
+  /** Map-side buffers, one per rating-block partition of `g`, each flushed
+    * as a [[Chunk]] every [[ChunkRows]] rows. */
+  private[cmf] final class ChunkBuffers(g: Geometry) {
     private final class Buf {
       val side = new mutable.ArrayBuilder.ofInt
       val dst = new mutable.ArrayBuilder.ofLong
@@ -321,9 +294,17 @@ object CollectiveALS {
         c
       }
     }
-    private val bufs = Array.fill(total)(new Buf)
+    private val bufs = Array.fill(g.offsets.last)(new Buf)
 
-    def add(target: Int, side: Int, dst: Long, src: Long, rating: Float): Iterator[(Int, Chunk)] = {
+    /** Relation i's rating (left id, right id, v), bound for the blocks of
+      * both of its entities. */
+    def add(i: Int, lid: Long, rid: Long, v: Float): Iterator[(Int, Chunk)] = {
+      val (l, r) = g.rels(i)
+      put(g.offsets(l) + blockOf(lid, g.blocks(l)), 2 * i, lid, rid, v) ++
+        put(g.offsets(r) + blockOf(rid, g.blocks(r)), 2 * i + 1, rid, lid, v)
+    }
+
+    private def put(target: Int, side: Int, dst: Long, src: Long, rating: Float): Iterator[(Int, Chunk)] = {
       val b = bufs(target)
       b.side += side; b.dst += dst; b.src += src; b.rating += rating
       if (b.side.length < ChunkRows) Iterator.empty else Iterator.single((target, b.result()))
@@ -333,7 +314,53 @@ object CollectiveALS {
       bufs.indices.iterator.filter(bufs(_).side.length > 0).map(t => (t, bufs(t).result()))
   }
 
-  /** One block of one entity, built once per fit.
+  /** The rating blocks of `g`: one shuffle of the [[ChunkBuffers]] output
+    * `chunks` into every entity's blocks, each sorted into a [[Block]]. */
+  private[cmf] def ratingBlocks(g: Geometry, chunks: Seq[RDD[(Int, Chunk)]]): RDD[Block] = {
+    val srcBlocks = g.sideSrc.map(g.blocks)
+    chunks.head.context.union(chunks).partitionBy(new HashPartitioner(g.offsets.last))
+      .mapPartitions(it => Iterator.single(Block.build(it.map(_._2), srcBlocks)))
+  }
+
+  /** One half-step for entity `e`: its source entities' blocks send their
+    * factors (`factors(x)`: k floats per id of `layout(x)`) to the blocks of
+    * `e` that rated them, which build and solve their ids' equations. With
+    * implicit preferences one job first sums each relation's Gram partials
+    * in block order. */
+  private[cmf] def halfStep(g: Geometry, layout: Array[RDD[Block]], factors: Array[RDD[Array[Float]]], e: Int,
+      rules: Rules): RDD[Array[Float]] = {
+    val (sc, k) = (layout(e).context, rules.k)
+    val sides = g.sideDst.indices.filter(g.sideDst(_) == e)
+    // Implicit prefs: per incident relation, the YtY Gram of the source
+    // factors that relation observes (the reference's per-relation
+    // srcFactorBlock).
+    val yty: Array[Array[Double]] =
+      if (!rules.implicitPrefs) Array.empty
+      else {
+        val gramSides = sides.map(_ / 2).distinct
+          .map(rel => if (g.rels(rel)._1 == e) 2 * rel else 2 * rel + 1)
+        val partials = sc.union(gramSides.map { s =>
+          layout(g.sideSrc(s)).zipPartitions(factors(g.sideSrc(s))) { (bi, fi) =>
+            Iterator.single((s / 2, bi.next().gram(s, fi.next(), k)))
+          }
+        }).collect()
+        val out = new Array[Array[Double]](g.rels.length)
+        partials.foreach { case (rel, gram) =>
+          if (out(rel) == null) out(rel) = gram
+          else { var i = 0; while (i < gram.length) { out(rel)(i) += gram(i); i += 1 } }
+        }
+        out
+      }
+    val ytyB = sc.broadcast(yty)
+    val sent = sc.union(sides.map { s =>
+      layout(g.sideSrc(s)).zipPartitions(factors(g.sideSrc(s))) { (bi, fi) =>
+        bi.next().send(s, fi.next(), k)
+      }
+    }).partitionBy(new HashPartitioner(g.blocks(e)))
+    layout(e).zipPartitions(sent)((bi, mi) => Iterator.single(bi.next().solve(mi, rules, ytyB.value)))
+  }
+
+  /** One block of one entity, built once per fit or fold-in.
     *
     * In-block: `ids` (ascending) are the block's entity ids; the ratings of
     * `ids(d)` are entries `[ptr(d), ptr(d + 1))`, sorted by (side, source,
@@ -377,14 +404,10 @@ object CollectiveALS {
 
     /** Builds and solves every id's normal equation from the received
       * source factors, one id at a time, into k floats per id. */
-    def solve(
-        received: Iterator[(Int, (Int, Array[Long], Array[Float]))],
-        k: Int,
-        solver: LeastSquaresSolver,
-        reg: Double,
-        implicitPrefs: Boolean,
-        alpha: Double,
+    def solve(received: Iterator[(Int, (Int, Array[Long], Array[Float]))], rules: Rules,
         yty: Array[Array[Double]]): Array[Float] = {
+      val Rules(k, reg, implicitPrefs, alpha, nonnegative) = rules
+      val solver: LeastSquaresSolver = if (nonnegative) new NnlsSolver(k) else new CholeskySolver(k)
       val feats = srcIds.map(s => if (s == null) null else new Array[Float](s.length * k))
       received.foreach { case (_, (s, sent, f)) =>
         var j = 0
@@ -406,20 +429,8 @@ object CollectiveALS {
         var t = ptr(d)
         while (t < ptr(d + 1)) {
           val f = feats(side(t))
-          val off = src(t) * k
-          val r = rating(t)
           mask |= 1L << (side(t) / 2)
-          // Same rule as NormalEqAggregator.reduce.
-          if (!implicitPrefs) {
-            NormalEq.addOuter(ata, f, off, k, 1.0)
-            if (r != 0.0f) NormalEq.axpy(atb, f, off, k, r.toDouble)
-            n += 1
-          } else if (r > 0.0f) {
-            val c1 = alpha * math.abs(r.toDouble)
-            NormalEq.addOuter(ata, f, off, k, c1)
-            NormalEq.axpy(atb, f, off, k, c1 + 1.0)
-            n += 1
-          }
+          n += NormalEq.add(ata, atb, f, src(t) * k, k, rating(t), implicitPrefs, alpha)
           t += 1
         }
         var rel = 0

@@ -3,9 +3,9 @@ package graft.cmf
 import org.apache.spark.HashPartitioner
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, SpecificInternalRow, UnsafeArrayData, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, SpecificInternalRow, UnsafeArrayData, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.UnsafeRowSerializer
 import org.apache.spark.sql.functions._
@@ -116,14 +116,11 @@ class CollectiveALSModel private[cmf] (
       BoundReference(n + 2, ArrayType(FloatType, containsNull = false), nullable = true))
     val out = slots.toSeq.map(i => if (i < 0) BoundReference(n + 3, FloatType, nullable = false) else field(i))
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val broadcastBytes = spark.conf.get("spark.sql.autoBroadcastJoinThreshold").trim match {
-      case s if s.startsWith("-") => -1L
-      case s => JavaUtils.byteStringAsBytes(s)
-    }
+    val threshold = readWholeBytes(spark)
     val rows = graft.Tables.deferred(spark.sparkContext) {
       val input = ds.select(col("*"), ds(leftEntity).cast("long"), ds(rightEntity).cast("long"))
         .queryExecution.toRdd
-      val withLeft = routeTo(input, n + 2, n, n + 1, blocksOf(li, broadcastBytes), parts)
+      val withLeft = routeTo(input, n + 2, n, n + 1, blocksOf(li, threshold), parts)
         .mapPartitions { it =>
           val project = UnsafeProjection.create(withFactor)
           val factor = new SpecificInternalRow(Seq(ArrayType(FloatType, containsNull = false)))
@@ -133,7 +130,7 @@ class CollectiveALSModel private[cmf] (
             project(joined(r, factor)): InternalRow
           }
         }
-      routeTo(withLeft, n + 3, n + 1, n, blocksOf(ri, broadcastBytes), parts)
+      routeTo(withLeft, n + 3, n + 1, n, blocksOf(ri, threshold), parts)
         .mapPartitions { it =>
           val project = UnsafeProjection.create(out)
           val score = new SpecificInternalRow(Seq(FloatType))
@@ -174,6 +171,14 @@ class CollectiveALSModel private[cmf] (
     }
   }
 
+  /** The size up to which a factor table is read whole:
+    * `spark.sql.autoBroadcastJoinThreshold` in bytes, -1 when off. */
+  private def readWholeBytes(spark: SparkSession): Long =
+    spark.conf.get("spark.sql.autoBroadcastJoinThreshold").trim match {
+      case s if s.startsWith("-") => -1L
+      case s => JavaUtils.byteStringAsBytes(s)
+    }
+
   /** Entity `e`'s table size in bytes, without a job: a fitted model's as
     * its checkpoint is stored, any other's as Catalyst estimates it (a
     * loaded model's parquet files), which is what a join would compare
@@ -187,23 +192,28 @@ class CollectiveALSModel private[cmf] (
 
   /** Fold-in: factors for `entity` ids NOT in the model (new users), each
     * solved against the FROZEN `srcEntity` factors from the supplied
-    * ratings only — one half-iteration of ALS restricted to the new rows,
-    * the standard way to serve a cold user without refitting. Uses the
-    * estimator's normal-equation rules ([[NormalEqAggregator]]) and
-    * solvers, so λ·n (ALS-WR) regularization, Hu-Koren implicit
-    * confidence (with the observed-src-restricted YtY Gram), and the NNLS
-    * option all behave exactly as in `fit`.
+    * ratings only: one half-step of the fit ([[CollectiveALS.halfStep]])
+    * with the model's factors as the source, the standard way to serve a
+    * cold user without refitting. λ·n (ALS-WR) regularization, Hu-Koren
+    * confidence (with the Gram of the rated known src factors) and NNLS
+    * are the fit's own code.
     *
-    * Scale: one shuffle-hash join of the new ratings against the frozen
-    * src factor table + one groupBy(id) with map-side partial normal-
-    * equation aggregation, then a per-partition k×k solve. Cost is
-    * proportional to the NEW ratings — the training corpus is never
-    * touched — so folding in a day's signups against a billion-item
-    * factor table is a routine incremental job.
+    * Scale: no job to build the frame, one to compute it (implicit: a Gram
+    * job first). Ratings of unknown src ids are dropped where they are
+    * against a src table read whole, or after routing to its blocks; the
+    * rest go into `spark.sql.shuffle.partitions` rating blocks of new ids
+    * and nb·m of src ids (nb: the src table's blocks as [[predict]] reads
+    * them; m = ⌈`spark.sql.shuffle.partitions` / nb⌉, so one block does
+    * not serialize the batch). Src block p reads factor block p mod nb in
+    * place and sends k floats per (src id, new-id block).
     *
-    * Ratings whose src id is unseen by the model contribute nothing
-    * (inner join); an entity id none of whose src ids are known yields no
-    * row. Returns (id, features) shaped like `factorsFor(entity)`.
+    * Unknown (or null) src ids contribute nothing; an entity id with no
+    * known src id yields no row. Duplicate ratings each count;
+    * `ratingCol = ""` rates every row 1.0. A null entity id with a known
+    * src id fails the job (a non-numeric one casts to null with ANSI off,
+    * and fails in the cast with it on). Returns (id, features) shaped like
+    * `factorsFor(entity)`; explicit and NNLS results are bitwise
+    * reproducible whatever the partition counts.
     */
   def foldIn(
       ratings: DataFrame,
@@ -214,50 +224,50 @@ class CollectiveALSModel private[cmf] (
       implicitPrefs: Boolean = false,
       alpha: Double = 1.0,
       nonnegative: Boolean = false): DataFrame = {
+    val si = indexOf(srcEntity)
     val spark = ratings.sparkSession
-    import spark.implicits._
-    val src = factorsFor(srcEntity)
-    val ratingExpr =
-      if (ratingCol.nonEmpty) col(ratingCol).cast("float") else lit(1.0f)
-    val data = ratings.select(
-      col(entity).cast("long").as("id"),
-      col(srcEntity).cast("long").as("srcId"),
-      ratingExpr.as("rating"))
-    val neUdaf = udaf(new NormalEqAggregator(rank, implicitPrefs, alpha))
-    val f = src.hint("shuffle_hash")
-    val grouped = data.join(f, data("srcId") === f("id"))
-      .select(data("id").as("id"), f("features").as("features"), col("rating"))
-      .groupBy("id")
-      .agg(neUdaf(col("features"), col("rating"), lit(0)).as("ne"))
-    // Implicit mode: the r=0 baseline Gram over the src factors actually
-    // rated by the fold-in batch (the estimator's per-relation
-    // srcFactorBlock restriction, here with a single implied relation).
-    val yty: Option[Array[Double]] =
-      if (!implicitPrefs) None
-      else {
-        val gramUdaf = udaf(new NormalEqAggregator(rank, false, 1.0))
-        Some(src
-          .join(data.select(col("srcId").as("id")), Seq("id"), "left_semi")
-          .agg(gramUdaf(col("features"), lit(0.0f), lit(0)).as("ne"))
-          .select(col("ne.ata")).head.getSeq[Double](0).toArray)
+    val k = rank
+    val rules = CollectiveALS.Rules(k, regParam, implicitPrefs, alpha, nonnegative)
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val threshold = readWholeBytes(spark)
+    val ratingExpr = if (ratingCol.nonEmpty) col(ratingCol).cast("float") else lit(1.0f)
+    val selected = ratings.select(col(entity).cast("long"), col(srcEntity).cast("long"), ratingExpr)
+    val rows = graft.Tables.deferred(spark.sparkContext) {
+      val frozen = blocksOf(si, threshold)
+      val nb = frozen.getNumPartitions
+      val m = math.max(1, (parts + nb - 1) / nb)
+      // Entity 0 is `entity`, entity 1 the source: blockOf(x, nb·m) mod nb
+      // is blockOf(x, nb), so source block p reads factor block p mod nb.
+      val g = new CollectiveALS.Geometry(Array((0, 1)), Array(parts, nb * m))
+      val chunks = routeTo(selected.queryExecution.toRdd, 3, 1, 0, frozen, parts).mapPartitions { it =>
+        val out = new CollectiveALS.ChunkBuffers(g)
+        it.filter { case (r, b) => b.find(r, 1) >= 0 }.flatMap { case (r, _) =>
+          require(!r.isNullAt(0), s"$entity ids must be numeric (cast to long produced null)")
+          out.add(0, r.getLong(0), r.getLong(1), r.getFloat(2))
+        } ++ out.flush()
       }
-    val k = rank; val nn = nonnegative; val reg = regParam
-    val ytyB = spark.sparkContext.broadcast(yty)
-    grouped
-      .select(col("id"), col("ne.ata"), col("ne.atb"), col("ne.n"))
-      .as[(Long, Array[Double], Array[Double], Long)]
-      .mapPartitions { it =>
-        val solver: LeastSquaresSolver =
-          if (nn) new NnlsSolver(k) else new CholeskySolver(k)
-        it.map { case (id, ata, atb, n) =>
-          ytyB.value.foreach { g =>
-            var i = 0
-            while (i < ata.length) { ata(i) += g(i); i += 1 }
-          }
-          (id, solver.solve(ata, atb, n * reg))
+      val all = CollectiveALS.ratingBlocks(g, Seq(chunks))
+      val (dst, src) = (g.layout(all, 0), g.layout(all, 1))
+      val srcFactors = src.zipPartitions(copies(frozen, m)) { (bi, fi) =>
+        val (b, f) = (bi.next(), fi.next())
+        Iterator.single(b.ids.flatMap { id =>
+          val at = f.indexOf(id)
+          require(f.length(at) == k, s"feature length ${f.length(at)} != rank $k")
+          f.feats.slice(f.from(at), f.from(at + 1))
+        })
+      }
+      val solved = CollectiveALS.halfStep(g, Array(dst, src), Array(null, srcFactors), 0, rules)
+      dst.zipPartitions(solved) { (bi, fi) =>
+        val (b, f) = (bi.next(), fi.next())
+        Iterator.tabulate(b.ids.length) { d =>
+          new GenericInternalRow(Array[Any](b.ids(d),
+            UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOfRange(f, d * k, d * k + k)))): InternalRow
         }
       }
-      .toDF("id", "features")
+    }
+    GraftSqlShim.internalCreateDataFrame(spark, rows, StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("features", ArrayType(FloatType, containsNull = false)))))
   }
 
   /** Top-k right-entity recommendations per left-entity id, as rows
@@ -370,7 +380,10 @@ object CollectiveALSModel {
     /** Index of the id in field `at` of `r`; negative if it is null or not
       * in this block. */
     def find(r: InternalRow, at: Int): Int =
-      if (r.isNullAt(at)) -1 else java.util.Arrays.binarySearch(ids, r.getLong(at))
+      if (r.isNullAt(at)) -1 else indexOf(r.getLong(at))
+
+    /** Index of `id`; negative if it is not in this block. */
+    def indexOf(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
 
     /** That id's features as an array value; null if it is null or not
       * here. */
@@ -409,7 +422,6 @@ object CollectiveALSModel {
       spread: Int,
       blocks: RDD[FactorBlock],
       parts: Int): RDD[(InternalRow, FactorBlock)] = {
-    val sc = rows.context
     val nb = blocks.getNumPartitions
     val routed = if (nb == 1) rows else {
       val m = math.max(1, (parts + nb - 1) / nb)
@@ -419,11 +431,16 @@ object CollectiveALSModel {
         .setSerializer(new UnsafeRowSerializer(numFields))
         .values
     }
-    routed.zipPartitions(sc.union(Seq.fill(routed.getNumPartitions / nb)(blocks))) { (it, bs) =>
+    routed.zipPartitions(copies(blocks, routed.getNumPartitions / nb)) { (it, bs) =>
       val b = bs.next()
       it.map(r => (r, b))
     }
   }
+
+  /** `m` copies of `blocks` as one RDD, partition p holding block p mod nb:
+    * nb·m tasks each build their own copy of one block, with no shuffle. */
+  private def copies(blocks: RDD[FactorBlock], m: Int): RDD[FactorBlock] =
+    blocks.context.union(Seq.fill(m)(blocks))
 
   /** Right ids per top-k block and per chunk a task holds: 100k ids is
     * 12.8 MB of factors at rank 32. */

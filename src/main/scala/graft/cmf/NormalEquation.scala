@@ -15,13 +15,11 @@ import org.apache.spark.sql.{Encoder, Encoders}
   * Same math as the reference's NormalEquation
   * (`/root/reference/src/main/scala/com/github/jongwook/cmf/CollectiveALS.scala:504-560`),
   * and like the reference [[CollectiveALS]] builds these in place inside
-  * each destination block from routed source factors (`addOuter`/`axpy`
-  * over a flat factor buffer), so they never cross a shuffle. [[NormalEqAggregator]] carries
-  * the same buffer through a Spark SQL aggregation for
-  * [[CollectiveALSModel.foldIn]], where map-side partial aggregation
-  * shuffles one buffer of k(k+1)/2 + k doubles per (partition, id) —
-  * about k/2 times the bytes of routing k floats per (id, block), which
-  * is acceptable for a fold-in batch but not for a fit.
+  * each destination block from routed source factors, one rating at a
+  * time through [[NormalEq.add]], so they never cross a shuffle; the fit
+  * and [[CollectiveALSModel.foldIn]] share that path. [[NormalEqAggregator]]
+  * carries the same buffer through a Spark SQL aggregation. No library
+  * code uses it; it is kept for the benchmark's kernel timing.
   */
 case class NormalEq(
     var ata: Array[Double],
@@ -33,11 +31,7 @@ object NormalEq {
   def zero(rank: Int): NormalEq =
     NormalEq(new Array[Double](rank * (rank + 1) / 2), new Array[Double](rank), 0L, 0L)
 
-  /** ata += c · f fᵀ (packed upper, column-major). */
-  def addOuter(ata: Array[Double], f: Array[Float], c: Double): Unit =
-    addOuter(ata, f, 0, f.length, c)
-
-  /** ata += c · v vᵀ for v = f[off, off + k). */
+  /** ata += c · v vᵀ for v = f[off, off + k) (packed upper, column-major). */
   def addOuter(ata: Array[Double], f: Array[Float], off: Int, k: Int, c: Double): Unit = {
     var j = 0
     var idx = 0
@@ -53,9 +47,23 @@ object NormalEq {
     }
   }
 
-  /** atb += c · f. */
-  def axpy(atb: Array[Double], f: Array[Float], c: Double): Unit =
-    axpy(atb, f, 0, f.length, c)
+  /** Adds rating `r` of source factor v = f[off, off + k) to (ata, atb);
+    * returns its count toward λ·n. Explicit: (v vᵀ, r·v), counted.
+    * Implicit (Hu-Koren, reference `CollectiveALS.scala:1014-1024`):
+    * c1 = α·|r|; r > 0 adds (c1·v vᵀ, (c1+1)·v), counted; r ≤ 0 adds nothing
+    * (its YtY baseline is merged at solve time). */
+  def add(ata: Array[Double], atb: Array[Double], f: Array[Float], off: Int, k: Int, r: Float,
+      implicitPrefs: Boolean, alpha: Double): Int =
+    if (!implicitPrefs) {
+      addOuter(ata, f, off, k, 1.0)
+      if (r != 0.0f) axpy(atb, f, off, k, r.toDouble)
+      1
+    } else if (r > 0.0f) {
+      val c1 = alpha * math.abs(r.toDouble)
+      addOuter(ata, f, off, k, c1)
+      axpy(atb, f, off, k, c1 + 1.0)
+      1
+    } else 0
 
   /** atb += c · f[off, off + k). */
   def axpy(atb: Array[Double], f: Array[Float], off: Int, k: Int, c: Double): Unit = {
@@ -68,13 +76,8 @@ object NormalEq {
 }
 
 /** Typed aggregator building one [[NormalEq]] per grouped entity id from
-  * (features, rating, relationIndex) rows.
-  *
-  * Explicit: every row adds (a aᵀ, r·a) and counts toward λ·n.
-  * Implicit (Hu-Koren, reference `CollectiveALS.scala:1014-1024`):
-  * confidence c1 = α·|r|; only r > 0 rows add (c1·a aᵀ, (c1+1)·a) and
-  * count; r ≤ 0 rows only mark relation membership (their YtY baseline is
-  * merged at solve time).
+  * (features, rating, relationIndex) rows, by [[NormalEq.add]]'s rule; every
+  * row marks its relation in the mask.
   */
 class NormalEqAggregator(rank: Int, implicitPrefs: Boolean, alpha: Double)
     extends Aggregator[(Array[Float], Float, Int), NormalEq, NormalEq] {
@@ -85,16 +88,7 @@ class NormalEqAggregator(rank: Int, implicitPrefs: Boolean, alpha: Double)
     val (f, r, rel) = in
     require(f.length == rank, s"feature length ${f.length} != rank $rank")
     b.mask |= 1L << rel
-    if (!implicitPrefs) {
-      NormalEq.addOuter(b.ata, f, 1.0)
-      if (r != 0.0f) NormalEq.axpy(b.atb, f, r.toDouble)
-      b.n += 1
-    } else if (r > 0.0f) {
-      val c1 = alpha * math.abs(r.toDouble)
-      NormalEq.addOuter(b.ata, f, c1)
-      NormalEq.axpy(b.atb, f, c1 + 1.0)
-      b.n += 1
-    }
+    b.n += NormalEq.add(b.ata, b.atb, f, 0, rank, r, implicitPrefs, alpha)
     b
   }
 

@@ -90,29 +90,37 @@ object CmfQueries {
     * confidence signal. Materialized once per (session, dir): the
     * predict query and its #9b shape audit read one fit. */
   def alsImplicit(s: SparkSession, dir: String): DataFrame =
-    implicitPredCache(s, dir) {
-      val ratings = custPartRatings(s, dir)
-      val model = new CollectiveALS("cust", "part")
-        .setRank(8).setMaxIter(3).setRegParam(0.1).setAlpha(1.0)
-        .setImplicitPrefs(true).setSeed(42L)
-        .fit(ratings)
-      val out = model.predict(ratings)
-        .select(col("cust"), col("part"), col("prediction"))
-        .transform(Tables.checkpoint)
-      model.release()
-      out
-    }
+    implicitPredCache(s, dir)(fitPredict(s, dir, new CollectiveALS("cust", "part")
+      .setRank(8).setMaxIter(3).setRegParam(0.1).setAlpha(1.0)
+      .setImplicitPrefs(true).setSeed(42L)))
+
+  /** `est` fitted on the cust→part ratings and scoring them: (cust, part,
+    * prediction), checkpointed; the model is released. */
+  private def fitPredict(s: SparkSession, dir: String, est: CollectiveALS): DataFrame = {
+    val ratings = custPartRatings(s, dir)
+    val model = est.fit(ratings)
+    val out = model.predict(ratings)
+      .select(col("cust"), col("part"), col("prediction"))
+      .transform(Tables.checkpoint)
+    model.release()
+    out
+  }
+
+  /** Rows, NaN predictions, and distinct customers and parts of a
+    * cust→part prediction. */
+  private def coverage(p: DataFrame): DataFrame =
+    p.agg(
+      count(lit(1)).as("n_rows"),
+      sum(when(isnan(col("prediction")), 1L).otherwise(0L)).as("n_nan"),
+      count_distinct(col("cust")).as("n_custs"),
+      count_distinct(col("part")).as("n_parts"))
 
   /** #9b implicit predict coverage shape — same invariants as
     * [[alsPredictShape]] (every training row scored once, zero NaN,
     * full id coverage), asserted on the Hu-Koren fit whose factor
     * values themselves are not SQL-reproducible. */
   def alsImplicitShape(s: SparkSession, dir: String): DataFrame =
-    alsImplicit(s, dir).agg(
-      count(lit(1)).as("n_rows"),
-      sum(when(isnan(col("prediction")), 1L).otherwise(0L)).as("n_nan"),
-      count_distinct(col("cust")).as("n_custs"),
-      count_distinct(col("part")).as("n_parts"))
+    coverage(alsImplicit(s, dir))
 
   private val nonnegPredCache = new Memo[DataFrame]
 
@@ -121,17 +129,8 @@ object CmfQueries {
     * and fit quality, the driver checks rows. Materialized once per
     * (session, dir): the #11b shape audit reads the same fit. */
   def alsNonnegative(s: SparkSession, dir: String): DataFrame =
-    nonnegPredCache(s, dir) {
-      val ratings = custPartRatings(s, dir)
-      val model = new CollectiveALS("cust", "part")
-        .setRank(8).setMaxIter(3).setRegParam(0.1).setNonnegative(true).setSeed(42L)
-        .fit(ratings)
-      val out = model.predict(ratings)
-        .select(col("cust"), col("part"), col("prediction"))
-        .transform(Tables.checkpoint)
-      model.release()
-      out
-    }
+    nonnegPredCache(s, dir)(fitPredict(s, dir, new CollectiveALS("cust", "part")
+      .setRank(8).setMaxIter(3).setRegParam(0.1).setNonnegative(true).setSeed(42L)))
 
   /** #11b nonnegative predict shape, sql-decidable without factor
     * values: every training row scores exactly once, no NaN (every id
@@ -153,22 +152,36 @@ object CmfQueries {
     * relations. Materialized once per (session, dir): the #10 predict
     * query and its #10c shape audit read one fit, not two. */
   def cmfFitPredict(s: SparkSession, dir: String): DataFrame =
-    cmfPredCache(s, dir) {
-      val r1 = custPartRatings(s, dir)
-      val r2 = partSuppPairs(s, dir)
-      val model = new CollectiveALS("cust", "part", "supp")
-        .setRank(8).setMaxIter(3).setRegParam(0.1).setSeed(42L)
-        .fit(("cust", "part") -> r1, ("part", "supp") -> r2)
-      val p1 = model.predict(r1, "cust", "part")
-        .select(lit("cust_part").as("relation"),
-          col("cust").as("left_id"), col("part").as("right_id"), col("prediction"))
-      val p2 = model.predict(r2, "part", "supp")
-        .select(lit("part_supp").as("relation"),
-          col("part").as("left_id"), col("supp").as("right_id"), col("prediction"))
-      val out = p1.unionAll(p2).transform(Tables.checkpoint)
-      model.release()
-      out
-    }
+    cmfPredCache(s, dir)(collectivePredict(s, dir, new CollectiveALS("cust", "part", "supp")
+      .setRank(8).setMaxIter(3).setRegParam(0.1).setSeed(42L)))
+
+  /** `est` fitted on cust→part ratings and part→supp pairs and scoring
+    * both: (relation, left_id, right_id, prediction), checkpointed; the
+    * model is released. */
+  private def collectivePredict(s: SparkSession, dir: String, est: CollectiveALS): DataFrame = {
+    val r1 = custPartRatings(s, dir)
+    val r2 = partSuppPairs(s, dir)
+    val model = est.fit(("cust", "part") -> r1, ("part", "supp") -> r2)
+    val p1 = model.predict(r1, "cust", "part")
+      .select(lit("cust_part").as("relation"),
+        col("cust").as("left_id"), col("part").as("right_id"), col("prediction"))
+    val p2 = model.predict(r2, "part", "supp")
+      .select(lit("part_supp").as("relation"),
+        col("part").as("left_id"), col("supp").as("right_id"), col("prediction"))
+    val out = p1.unionAll(p2).transform(Tables.checkpoint)
+    model.release()
+    out
+  }
+
+  /** Per relation of a [[collectivePredict]] output: rows, NaN
+    * predictions, and distinct left and right ids. */
+  private def relationCoverage(p: DataFrame): DataFrame =
+    p.groupBy("relation")
+      .agg(count(lit(1)).as("n_rows"),
+        sum(when(isnan(col("prediction")), 1L).otherwise(0L)).as("n_nan"),
+        count_distinct(col("left_id")).as("n_left"),
+        count_distinct(col("right_id")).as("n_right"))
+      .orderBy("relation")
 
   /** #10c collective predict coverage shape, sql-decidable: per
     * relation, every training pair scores exactly once with zero NaN
@@ -177,24 +190,12 @@ object CmfQueries {
     * catches a predict join that drops, duplicates, or cold-starts ids
     * on either relation of the multi-entity model. */
   def cmfPredictShape(s: SparkSession, dir: String): DataFrame =
-    cmfFitPredict(s, dir)
-      .groupBy("relation")
-      .agg(count(lit(1)).as("n_rows"),
-        sum(when(isnan(col("prediction")), 1L).otherwise(0L)).as("n_nan"),
-        count_distinct(col("left_id")).as("n_left"),
-        count_distinct(col("right_id")).as("n_right"))
-      .orderBy("relation")
+    relationCoverage(cmfFitPredict(s, dir))
 
   /** #10c' same coverage invariants on the IMPLICIT collective fit —
     * the Gram-mask-merge path gets its own SQL-decidable shape row. */
   def cmfImplicitShape(s: SparkSession, dir: String): DataFrame =
-    cmfImplicit(s, dir)
-      .groupBy("relation")
-      .agg(count(lit(1)).as("n_rows"),
-        sum(when(isnan(col("prediction")), 1L).otherwise(0L)).as("n_nan"),
-        count_distinct(col("left_id")).as("n_left"),
-        count_distinct(col("right_id")).as("n_right"))
-      .orderBy("relation")
+    relationCoverage(cmfImplicit(s, dir))
 
   /** #9+#10: three-entity *implicit* (Hu-Koren) collective fit — the
     * driver-side exercise of the per-relation YtY mask merge: the shared
@@ -205,25 +206,11 @@ object CmfQueries {
   private val cmfImplCache = new Memo[DataFrame]
 
   def cmfImplicit(s: SparkSession, dir: String): DataFrame =
-    cmfImplCache(s, dir) {
-      val r1 = custPartRatings(s, dir)
-      val r2 = partSuppPairs(s, dir)
-      val model = new CollectiveALS("cust", "part", "supp")
-        .setRank(8).setMaxIter(3).setRegParam(0.1).setAlpha(2.0)
-        .setImplicitPrefs(true).setSeed(42L)
-        .fit(("cust", "part") -> r1, ("part", "supp") -> r2)
-      val p1 = model.predict(r1, "cust", "part")
-        .select(lit("cust_part").as("relation"),
-          col("cust").as("left_id"), col("part").as("right_id"), col("prediction"))
-      val p2 = model.predict(r2, "part", "supp")
-        .select(lit("part_supp").as("relation"),
-          col("part").as("left_id"), col("supp").as("right_id"), col("prediction"))
-      // Materialized once per (session, dir): the #10b predict query and
-      // its #10c' shape audit read one implicit fit, not two.
-      val out = p1.unionAll(p2).transform(Tables.checkpoint)
-      model.release()
-      out
-    }
+    // Materialized once per (session, dir): the #10b predict query and
+    // its #10c' shape audit read one implicit fit, not two.
+    cmfImplCache(s, dir)(collectivePredict(s, dir, new CollectiveALS("cust", "part", "supp")
+      .setRank(8).setMaxIter(3).setRegParam(0.1).setAlpha(2.0)
+      .setImplicitPrefs(true).setSeed(42L)))
 
   /** #13: blocked top-k recommendation for a deterministic 1-in-20 user
     * sample (sampling at the factor-table boundary keeps the query cheap
@@ -251,9 +238,6 @@ object CmfQueries {
         max("rank").as("max_rank"), count_distinct(col("rank")).as("n_ranks"))
       .orderBy("cust")
 
-  /** #12b predict coverage shape: predicting the training relation from
-    * the fitted model must score every rating row (no NaN — every id was
-    * seen in the fit) exactly once. */
   /** #13c model persistence round-trip, driver-hash-checked: save the
     * shared explicit model, load it back, and score the training
     * relation with BOTH models — every pair must predict identically
@@ -279,13 +263,18 @@ object CmfQueries {
           sum(when(isnan(col("p1")), 1L).otherwise(0L)).as("n_nan"))
     })
 
-  def alsPredictShape(s: SparkSession, dir: String): DataFrame = {
-    val p = explicitModel(s, dir).predict(custPartRatings(s, dir))
-    p.agg(count(lit(1)).as("n_rows"),
-      sum(when(isnan(col("prediction")), 1L).otherwise(0L)).as("n_nan"),
-      count_distinct(col("cust")).as("n_custs"),
-      count_distinct(col("part")).as("n_parts"))
-  }
+  /** #12b predict coverage shape: predicting the training relation from
+    * the fitted model must score every rating row (no NaN — every id was
+    * seen in the fit) exactly once. */
+  def alsPredictShape(s: SparkSession, dir: String): DataFrame =
+    coverage(explicitModel(s, dir).predict(custPartRatings(s, dir)))
+
+  /** Genuinely unseen customers: every seventh training customer re-keyed
+    * by +1,000,000, keeping their real part ratings. */
+  private def unseenCustomers(s: SparkSession, dir: String): DataFrame =
+    custPartRatings(s, dir)
+      .filter(col("cust") % 7 === 0)
+      .withColumn("cust", col("cust") + 1000000L)
 
   /** #12c fold-in coverage shape: a batch of genuinely-unseen customers
     * (training custs re-keyed by +1,000,000, keeping their real part
@@ -293,26 +282,20 @@ object CmfQueries {
     * invariants: exactly one factor row per new customer (every part in
     * the batch is known to the model, so nobody drops out), ids unique,
     * every factor exactly rank-long with no NaN coefficient. */
-  def alsFoldinShape(s: SparkSession, dir: String): DataFrame = {
-    val batch = custPartRatings(s, dir)
-      .filter(col("cust") % 7 === 0)
-      .withColumn("cust", col("cust") + 1000000L)
-    explicitModel(s, dir).foldIn(batch, "cust", "part", regParam = 0.1)
+  def alsFoldinShape(s: SparkSession, dir: String): DataFrame =
+    explicitModel(s, dir).foldIn(unseenCustomers(s, dir), "cust", "part", regParam = 0.1)
       .agg(
         count(lit(1)).as("n_users"),
         count_distinct(col("id")).as("n_ids"),
         sum(when(size(col("features")) =!= 8, 1L).otherwise(0L)).as("n_badrank"),
         sum(when(exists(col("features"), f => isnan(f)), 1L).otherwise(0L)).as("n_nan"))
-  }
 
   /** #12c' fold-in mode coverage: the same unseen-customer batch folded
     * under implicit (Hu-Koren Gram) and NNLS modes — per mode, full
     * coverage, rank-8 factors, no NaN, and (NNLS only) zero negative
     * coefficients, all SQL-decidable. */
   def foldinModesShape(s: SparkSession, dir: String): DataFrame = {
-    val batch = custPartRatings(s, dir)
-      .filter(col("cust") % 7 === 0)
-      .withColumn("cust", col("cust") + 1000000L)
+    val batch = unseenCustomers(s, dir)
     val m = explicitModel(s, dir)
     def shape(mode: String, f: DataFrame, checkNonneg: Boolean) =
       f.agg(
@@ -408,6 +391,8 @@ object CmfQueries {
       // crash on Row.getDouble(null).
       def opt(r: org.apache.spark.sql.Row, i: Int): Option[Double] =
         if (r.isNullAt(i)) None else Some(r.getDouble(i))
+      // The result is computed: nothing reads the checkpoints again.
+      Seq(rated, train, pred, predTrain).foreach(Tables.release)
       Seq((nTest, hold.getLong(0),
           opt(evTrain, 2).exists(_ < 0.8 * sdTrain),
           ndcg >= 0.85,
@@ -481,6 +466,9 @@ object CmfQueries {
       sqrt(avg(pow(col("full") - col("rating"), 2))).as("rmse_full"),
       sqrt(avg(pow(col("base") - col("rating"), 2))).as("rmse_base"),
       sqrt(avg(pow(lit(mu) - col("rating"), 2))).as("rmse_mean")).head()
+    // The result is computed: nothing reads the checkpoints again.
+    model.release()
+    Seq(rated, train, bu, bi, resid).foreach(Tables.release)
     import s.implicits._
     Seq((m.getLong(0),
         m.getDouble(2) <= m.getDouble(3),
@@ -689,6 +677,32 @@ object CmfQueries {
     * numeric bounds in specs — but the *shapes* are SQL-decidable and
     * oracled here: which ids get scored, how many recommendations each
     * user receives, and that ranks are contiguous. */
+  /** [[coverage]] of a prediction of every training (cust, part) pair. */
+  private val coverageOracle =
+    """SELECT count(*) AS n_rows, 0::BIGINT AS n_nan,
+      |  count(DISTINCT cust) AS n_custs, count(DISTINCT part) AS n_parts
+      |FROM (
+      |  SELECT o_custkey AS cust, l_partkey AS part
+      |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** [[relationCoverage]] of a prediction of both training relations. */
+  private val relationCoverageOracle =
+    """SELECT * FROM (
+      |  SELECT 'cust_part' AS relation, count(*) AS n_rows,
+      |    0::BIGINT AS n_nan,
+      |    count(DISTINCT o_custkey) AS n_left,
+      |    count(DISTINCT l_partkey) AS n_right
+      |  FROM (
+      |    SELECT o_custkey, l_partkey
+      |    FROM orders JOIN lineitem ON l_orderkey = o_orderkey
+      |    GROUP BY 1, 2)
+      |  UNION ALL
+      |  SELECT 'part_supp', count(*), 0::BIGINT,
+      |    count(DISTINCT l_partkey), count(DISTINCT l_suppkey)
+      |  FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
+      |) ORDER BY relation""".stripMargin
+
   val oracles: Map[String, String] = Map(
     // Micro-rounded cosines make the neighbor election integer-exact;
     // predictions and errors are integer arithmetic until display.
@@ -820,58 +834,18 @@ object CmfQueries {
         |  SELECT o_custkey, l_partkey
         |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
         |  GROUP BY 1, 2)""".stripMargin,
-    "als_predict_shape" ->
-      """SELECT count(*) AS n_rows, 0::BIGINT AS n_nan,
-        |  count(DISTINCT cust) AS n_custs, count(DISTINCT part) AS n_parts
-        |FROM (
-        |  SELECT o_custkey AS cust, l_partkey AS part
-        |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        |  GROUP BY 1, 2)""".stripMargin,
+    "als_predict_shape" -> coverageOracle,
     // Same coverage invariants as als_predict_shape, on the implicit fit.
-    "als_implicit_shape" ->
-      """SELECT count(*) AS n_rows, 0::BIGINT AS n_nan,
-        |  count(DISTINCT cust) AS n_custs, count(DISTINCT part) AS n_parts
-        |FROM (
-        |  SELECT o_custkey AS cust, l_partkey AS part
-        |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        |  GROUP BY 1, 2)""".stripMargin,
+    "als_implicit_shape" -> coverageOracle,
     "als_nonnegative_shape" ->
       """SELECT count(*) AS n_rows, 0::BIGINT AS n_nan, 0::BIGINT AS n_neg
         |FROM (
         |  SELECT o_custkey AS cust, l_partkey AS part
         |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
         |  GROUP BY 1, 2)""".stripMargin,
-    "cmf_predict_shape" ->
-      """SELECT * FROM (
-        |  SELECT 'cust_part' AS relation, count(*) AS n_rows,
-        |    0::BIGINT AS n_nan,
-        |    count(DISTINCT o_custkey) AS n_left,
-        |    count(DISTINCT l_partkey) AS n_right
-        |  FROM (
-        |    SELECT o_custkey, l_partkey
-        |    FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        |    GROUP BY 1, 2)
-        |  UNION ALL
-        |  SELECT 'part_supp', count(*), 0::BIGINT,
-        |    count(DISTINCT l_partkey), count(DISTINCT l_suppkey)
-        |  FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
-        |) ORDER BY relation""".stripMargin,
+    "cmf_predict_shape" -> relationCoverageOracle,
     // Identical coverage truth — the implicit fit scores the same
     // relations over the same id space.
-    "cmf_implicit_shape" ->
-      """SELECT * FROM (
-        |  SELECT 'cust_part' AS relation, count(*) AS n_rows,
-        |    0::BIGINT AS n_nan,
-        |    count(DISTINCT o_custkey) AS n_left,
-        |    count(DISTINCT l_partkey) AS n_right
-        |  FROM (
-        |    SELECT o_custkey, l_partkey
-        |    FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        |    GROUP BY 1, 2)
-        |  UNION ALL
-        |  SELECT 'part_supp', count(*), 0::BIGINT,
-        |    count(DISTINCT l_partkey), count(DISTINCT l_suppkey)
-        |  FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
-        |) ORDER BY relation""".stripMargin,
+    "cmf_implicit_shape" -> relationCoverageOracle,
   )
 }

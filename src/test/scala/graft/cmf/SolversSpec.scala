@@ -8,8 +8,8 @@ class SolversSpec extends AnyFunSuite {
   private def normalEq(rows: Seq[(Array[Float], Float)], k: Int): NormalEq = {
     val ne = NormalEq.zero(k)
     rows.foreach { case (a, b) =>
-      NormalEq.addOuter(ne.ata, a, 1.0)
-      NormalEq.axpy(ne.atb, a, b.toDouble)
+      NormalEq.addOuter(ne.ata, a, 0, k, 1.0)
+      NormalEq.axpy(ne.atb, a, 0, k, b.toDouble)
       ne.n += 1
     }
     ne

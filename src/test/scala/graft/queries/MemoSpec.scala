@@ -170,6 +170,12 @@ class MemoSpec extends SparkSpec {
       CmfQueries.cmfFitPredict _, CmfQueries.cmfImplicit _).map(_(s, dir))
     val inputs = Seq(CmfQueries.custPartRatings(s, dir), CmfQueries.partSuppPairs(s, dir))
     assert(persisted -- before == (outs ++ inputs).flatMap(checkpointIds).toSet)
+    // These two return a local one-row frame: nothing they made stays.
+    for (entry <- Seq(CmfQueries.fitQuality _, CmfQueries.alsBaseline _)) {
+      val held = persisted
+      entry(s, dir)
+      assert(persisted == held)
+    }
     Memo.release(s)
   }
 
